@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 import sys
-import zipfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +24,7 @@ if REPO not in sys.path:
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from cord19_crawler_spark import write_package_zip  # noqa: E402
 from cord19_crawler_spark.functions.hashes import (  # noqa: E402
     MINHASH_PRIME,
     md5_long56,
@@ -40,18 +40,13 @@ _PKG_ZIP = None
 def _ensure_workers(spark: SparkSession) -> None:
     """Ship the package to executor Python workers (addPyFile), so pandas
     UDFs defined in the package deserialize there. Equivalent of
-    ``spark-submit --py-files`` for a driver that didn't pass it."""
+    ``spark-submit --py-files`` for a driver that didn't pass it. A caller
+    may preset ``_PKG_ZIP`` to ship a zip it built elsewhere."""
     global _PKG_ZIP
     if _PKG_ZIP is None:
-        zpath = os.path.join("/tmp", "cord19_crawler_spark_pkg.zip")
-        with zipfile.ZipFile(zpath, "w") as zf:
-            pkg = os.path.join(REPO, "cord19_crawler_spark")
-            for root, _dirs, files in os.walk(pkg):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        zf.write(full, os.path.relpath(full, REPO))
-        _PKG_ZIP = zpath
+        _PKG_ZIP = write_package_zip(
+            os.path.join("/tmp", "cord19_crawler_spark_pkg.zip")
+        )
     spark.sparkContext.addPyFile(_PKG_ZIP)
 
 
@@ -73,8 +68,14 @@ _SPREAD_KEY = {
 }
 
 
+# plenty of scan units for any core count: the footer walk stops here, so a
+# directory of 10^5 files costs a bounded number of footer reads
+_SCAN_UNITS_CAP = 4096
+
+
 def _scan_units(path: str) -> int:
-    """Parallelizable scan units in a parquet file/dir (= row groups)."""
+    """Parallelizable scan units in a parquet file/dir (= row groups);
+    the count stops once it reaches _SCAN_UNITS_CAP."""
     global _SCAN_UNITS_CACHE
     try:
         cache = _SCAN_UNITS_CACHE
@@ -91,8 +92,10 @@ def _scan_units(path: str) -> int:
                         units += pq.ParquetFile(
                             os.path.join(root, fn)
                         ).metadata.num_row_groups
-                    if units >= 4096:  # plenty — stop footer-reading
+                    if units >= _SCAN_UNITS_CAP:
                         break
+                if units >= _SCAN_UNITS_CAP:
+                    break  # plenty — stop the whole footer walk
         else:
             units = pq.ParquetFile(path).metadata.num_row_groups
         cache[path] = units

@@ -25,21 +25,13 @@ import argparse
 import json
 import os
 import sys
-import zipfile
 
 
 def _cmd_package(args: argparse.Namespace) -> None:
+    from cord19_crawler_spark import write_package_zip
+
     os.makedirs(args.out, exist_ok=True)
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(args.out, "cord19_crawler_spark.zip")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
-    print(zpath)
+    print(write_package_zip(os.path.join(args.out, "cord19_crawler_spark.zip")))
 
 
 def _cmd_crawl(args: argparse.Namespace) -> None:

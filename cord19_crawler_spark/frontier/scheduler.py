@@ -62,6 +62,24 @@ FRONTIER_COLS = [
     "url", "url_id", "host", "partition", "priority", "discovered_round", "attempt"
 ]
 
+# every other table a round commits, with the schema of its EMPTY delta:
+# a round that did not touch a table still writes it (zero rows), because
+# the delta unions read every round dir. content_seen_new is committed only
+# on content_dedup checkpoints (CrawlScheduler._commit).
+EMPTY_DELTAS = {
+    "url_seen_new": "partition int, url_id long, url string",
+    "filter_state": "partition int, bitset binary, _sr int",
+    "host_state": (
+        "host string, min_delay_rounds int, max_in_flight int, "
+        "last_scheduled_round int, min_delay_seconds double, "
+        "last_fetch_ts double, _sr int"
+    ),
+    "crawl_log": (
+        "round int, seq int, url string, host string, priority double, attempt int"
+    ),
+    "content_seen_new": "fp string",
+}
+
 
 @dataclass
 class SchedulerConfig:
@@ -337,10 +355,6 @@ class CrawlScheduler:
                 self.cfg.min_delay_seconds,
             )
         ).withColumn("_sr", F.lit(0))
-        crawl_log = self.spark.createDataFrame(
-            [],
-            "round int, seq int, url string, host string, priority double, attempt int",
-        )
 
         def _counters(read) -> dict:
             return {
@@ -351,16 +365,16 @@ class CrawlScheduler:
                 "filter_config": self._filter_config(),
             }
 
-        tables = {
-            "frontier_new": frontier,
-            "url_seen_new": url_seen_new,
-            "filter_state": filter_state,
-            "host_state": host_state,
-            "crawl_log": crawl_log,
-        }
-        if self.cfg.extra.get("content_dedup"):
-            tables["content_seen_new"] = self._empty_content_delta()
-        self.store.commit_round(0, tables, counters_fn=_counters)
+        self._commit(
+            0,
+            {
+                "frontier_new": frontier,
+                "url_seen_new": url_seen_new,
+                "filter_state": filter_state,
+                "host_state": host_state,
+            },
+            _counters,
+        )
         frontier.unpersist()
 
     def _read(self, rnd: int, name: str) -> DataFrame:
@@ -433,73 +447,77 @@ class CrawlScheduler:
                 )
         return self.store.expire_rounds(upto)
 
-    def _compact_base_for(self, upto_rnd: int, name: str) -> int | None:
-        """Latest compaction ≤ upto_rnd that actually carries ``name`` —
-        snapshots written before a table joined the compaction set (e.g.
-        crawl_log/frontier_all predate round 3) fall back to delta unions."""
-        base_rnd = self.store.latest_compact(upto=upto_rnd)
-        if base_rnd is None or not self.store.has_compact_table(base_rnd, name):
-            return None
-        return base_rnd
-
-    def _newer_cumulative_base(self, name: str) -> int | None:
-        """Newest snapshot (at ANY round) carrying ``name`` — the read path
-        for history BELOW the compaction point after expire() deleted the
-        per-round dirs (a cumulative table filtered by round answers any
-        prefix query)."""
-        base_rnd = self.store.latest_compact()
-        if base_rnd is not None and self.store.has_compact_table(base_rnd, name):
-            return base_rnd
-        return None
-
-    def _read_cumulative(
-        self, upto_rnd: int, compact_name: str, delta_name: str, round_col: str
+    def _read_state(
+        self,
+        upto_rnd: int,
+        snapshot_name: str,
+        delta_name: str,
+        round_col: str | None = None,
+        merge_schema: bool = False,
     ) -> DataFrame:
-        """Cumulative history table through round upto_rnd: snapshot +
-        trailing deltas when one exists at ≤ upto_rnd; a NEWER snapshot
-        filtered on ``round_col`` when the prefix rounds were expired;
-        plain delta union otherwise."""
-        base_rnd = self._compact_base_for(upto_rnd, compact_name)
-        if base_rnd is None:
-            newer = self._newer_cumulative_base(compact_name)
-            if newer is not None and newer >= upto_rnd:
-                return self.store.read_compact_table(
-                    self.spark, newer, compact_name
-                ).filter(F.col(round_col) <= int(upto_rnd))
-            return self._read_deltas(upto_rnd, delta_name)
-        base = self.store.read_compact_table(self.spark, base_rnd, compact_name)
+        """The one state reader: ``snapshot_name`` through round
+        ``upto_rnd`` = the latest compaction snapshot ≤ upto_rnd that
+        carries it, plus the append-only ``delta_name`` rounds after it —
+        or the full delta union from round 0 when no such snapshot exists
+        (snapshots written before a table joined the compaction set fall
+        back the same way).
+
+        expire() deletes a contiguous 1..limit prefix of round dirs
+        (round 0 is always kept), so testing the first needed delta round
+        tells whether any were reclaimed. If so, a history table
+        (``round_col`` given: crawl_log, frontier_all) is served from a
+        NEWER cumulative snapshot filtered on ``round_col`` ≤ upto_rnd;
+        every other expired read raises ValueError naming the table,
+        instead of failing later on a deleted path. ``merge_schema``
+        unions footer schemas across rounds and fills columns missing on
+        either side of the snapshot/delta union (checkpoints written
+        before host_state's wall-clock columns or filter_state's ``_sr``
+        stamp)."""
+        base_rnd = self.store.latest_compact(upto=upto_rnd)
+        if base_rnd is not None and not self.store.has_compact_table(
+            base_rnd, snapshot_name
+        ):
+            base_rnd = None
         if base_rnd == upto_rnd:
-            return base
-        if not self.store.has_round(base_rnd + 1):
-            # the trailing deltas after THIS snapshot were expired (a later
-            # cumulative snapshot authorized reclaiming them) — serve the
-            # prefix from that newer snapshot instead of crashing on the
-            # deleted round dirs; expiry removes a contiguous 1..limit
-            # prefix, so testing the first needed round suffices
-            newer = self._newer_cumulative_base(compact_name)
-            if newer is not None and newer >= upto_rnd:
+            return self.store.read_compact_table(self.spark, base_rnd, snapshot_name)
+        first = 0 if base_rnd is None else base_rnd + 1
+        probe = max(first, 1)
+        if probe <= upto_rnd and not self.store.has_round(probe):
+            newer = self.store.latest_compact()
+            if (
+                round_col is not None
+                and newer is not None
+                and newer >= upto_rnd
+                and self.store.has_compact_table(newer, snapshot_name)
+            ):
                 return self.store.read_compact_table(
-                    self.spark, newer, compact_name
+                    self.spark, newer, snapshot_name
                 ).filter(F.col(round_col) <= int(upto_rnd))
             raise ValueError(
-                f"{compact_name} through round {upto_rnd}: delta rounds "
-                f"{base_rnd + 1}..{upto_rnd} were expired and no cumulative "
-                "snapshot covers them — compact() before expire(), or read "
-                "at a covered round"
+                f"{snapshot_name} through round {upto_rnd}: delta rounds "
+                f"{probe}..{upto_rnd} were expired and no cumulative "
+                f"snapshot carrying {snapshot_name} covers them — read at a "
+                "compaction snapshot round or at the current head, or "
+                "compact() before expire()"
             )
-        return base.unionByName(
-            self._read_deltas(upto_rnd, delta_name, from_rnd=base_rnd + 1)
+        deltas = self._read_deltas(
+            upto_rnd, delta_name, from_rnd=first, merge_schema=merge_schema
         )
+        if base_rnd is None:
+            return deltas
+        return self.store.read_compact_table(
+            self.spark, base_rnd, snapshot_name
+        ).unionByName(deltas, allowMissingColumns=merge_schema)
 
     def _read_crawl_log(self, upto_rnd: int) -> DataFrame:
         """FULL crawl log through round upto_rnd (compact-aware: works for
         any prefix even after expire() reclaimed the round dirs)."""
-        return self._read_cumulative(upto_rnd, "crawl_log", "crawl_log", "round")
+        return self._read_state(upto_rnd, "crawl_log", "crawl_log", "round")
 
     def _read_frontier_all(self, upto_rnd: int) -> DataFrame:
         """FULL frontier discovery log through round upto_rnd (compact-aware
         like _read_crawl_log; requeue needs original priorities/attempts)."""
-        return self._read_cumulative(
+        return self._read_state(
             upto_rnd, "frontier_all", "frontier_new", "discovered_round"
         )
 
@@ -514,33 +532,28 @@ class CrawlScheduler:
         MERGE-maintained table read, and on parquet it is co-partitioned by
         the uniform url hash (no skew)."""
         base_rnd = self.store.latest_compact(upto=upto_rnd)
-        deltas_expired = upto_rnd >= 1 and not self.store.has_round(
-            (base_rnd + 1) if base_rnd is not None else 1
-        )
-        if deltas_expired and (base_rnd is None or base_rnd < upto_rnd):
-            # the needed delta rounds were expired under a LATER cumulative
-            # snapshot — reconstruct pending from the cumulative logs (the
-            # same discovered-minus-scheduled definition; both readers have
-            # the newer-snapshot fallback)
-            frontier_all = self._read_frontier_all(upto_rnd)
-            scheduled = self._read_crawl_log(upto_rnd).select("url", "attempt")
-            return frontier_all.join(scheduled, ["url", "attempt"], "left_anti")
-        if base_rnd is None:
-            frontier_all = self._read_deltas(upto_rnd, "frontier_new")
-            scheduled = self._read_deltas(upto_rnd, "crawl_log").select(
-                "url", "attempt"
-            )
-            return frontier_all.join(scheduled, ["url", "attempt"], "left_anti")
-        base = self.store.read_compact_table(self.spark, base_rnd, "pending")
         if base_rnd == upto_rnd:
-            return base
-        # pending(r) = pending(K) ∪ new(K+1..r)  minus  scheduled(K+1..r)
-        # (valid because discovery is append-only and unique across rounds)
-        new = self._read_deltas(upto_rnd, "frontier_new", from_rnd=base_rnd + 1)
-        sched = self._read_deltas(
-            upto_rnd, "crawl_log", from_rnd=base_rnd + 1
-        ).select("url", "attempt")
-        return base.unionByName(new).join(sched, ["url", "attempt"], "left_anti")
+            return self.store.read_compact_table(self.spark, base_rnd, "pending")
+        if base_rnd is None or not self.store.has_round(base_rnd + 1):
+            # no snapshot yet, or its trailing deltas were expired under a
+            # LATER cumulative snapshot: discovered minus scheduled over the
+            # full logs (both history readers serve an expired prefix)
+            discovered = self._read_frontier_all(upto_rnd)
+            scheduled = self._read_crawl_log(upto_rnd)
+        else:
+            # pending(r) = pending(K) ∪ new(K+1..r)  minus  scheduled(K+1..r)
+            # (valid because discovery is append-only and unique across rounds)
+            discovered = self.store.read_compact_table(
+                self.spark, base_rnd, "pending"
+            ).unionByName(
+                self._read_deltas(upto_rnd, "frontier_new", from_rnd=base_rnd + 1)
+            )
+            scheduled = self._read_deltas(
+                upto_rnd, "crawl_log", from_rnd=base_rnd + 1
+            )
+        return discovered.join(
+            scheduled.select("url", "attempt"), ["url", "attempt"], "left_anti"
+        )
 
     def pending_frontier(self) -> DataFrame:
         """Public: current pending frontier (derived state)."""
@@ -549,40 +562,6 @@ class CrawlScheduler:
             raise ValueError("no committed rounds")
         return self._read_pending(last)
 
-    def _read_state_union(
-        self, upto_rnd: int, name: str, merge_schema: bool = False
-    ) -> DataFrame:
-        """Base-snapshot + append-only deltas for a latest-row-per-key
-        state table (host_state, filter_state), with the expiry guards:
-        deltas below a reclaimed prefix are only recoverable through a
-        compaction snapshot carrying the table."""
-        base_rnd = self._compact_base_for(upto_rnd, name)
-        if base_rnd is None:
-            if upto_rnd >= 1 and not self.store.has_round(1):
-                raise ValueError(
-                    f"{name} through round {upto_rnd}: delta rounds below "
-                    "the expiry point were reclaimed and no compaction "
-                    f"snapshot carries {name} — compact() with a version "
-                    "that snapshots it before expiring"
-                )
-            return self._read_deltas(upto_rnd, name, merge_schema=merge_schema)
-        allr = self.store.read_compact_table(self.spark, base_rnd, name)
-        if base_rnd < upto_rnd:
-            if not self.store.has_round(base_rnd + 1):
-                raise ValueError(
-                    f"{name} through round {upto_rnd}: delta rounds "
-                    f"{base_rnd + 1}..{upto_rnd} were expired — read at "
-                    "a compaction snapshot round or at the current head"
-                )
-            allr = allr.unionByName(
-                self._read_deltas(
-                    upto_rnd, name, from_rnd=base_rnd + 1,
-                    merge_schema=merge_schema,
-                ),
-                allowMissingColumns=True,
-            )
-        return allr
-
     def _read_host_state_raw(self, upto_rnd: int) -> DataFrame:
         """Effective host_state = LATEST delta row per host (max stamp
         round ``_sr`` wins). host_state is append-only like every other
@@ -590,7 +569,9 @@ class CrawlScheduler:
         scheduled — a full rewrite per round would be an O(hosts) ≈ 6 GB
         write at the 10^8-host design point. Compaction snapshots the
         reduced view so read fan-in stays bounded."""
-        allr = self._read_state_union(upto_rnd, "host_state", merge_schema=True)
+        allr = self._read_state(
+            upto_rnd, "host_state", "host_state", merge_schema=True
+        )
         # checkpoints written before wall-clock politeness lack these columns
         for c in ("min_delay_seconds", "last_fetch_ts"):
             if c not in allr.columns:
@@ -630,8 +611,12 @@ class CrawlScheduler:
         round carries the FULL state without ``_sr`` — detected from the
         head round's footer schema and read directly; the next commit
         migrates by writing one full stamped state (_filter_migrate)."""
-        head = self._read(upto_rnd, "filter_state")
-        if "_sr" not in head.columns:
+        head = (
+            self._read(upto_rnd, "filter_state")
+            if self.store.has_round(upto_rnd)
+            else None  # expired head: _read_state serves or refuses it
+        )
+        if head is not None and "_sr" not in head.columns:
             self._filter_migrate = True
             return head.withColumn("_sr", F.lit(upto_rnd))
         self._filter_migrate = False
@@ -639,7 +624,9 @@ class CrawlScheduler:
             # round 0 IS the full seed write (one stamped row per
             # partition) — no deltas to reduce over
             return head
-        allr = self._read_state_union(upto_rnd, "filter_state", merge_schema=True)
+        allr = self._read_state(
+            upto_rnd, "filter_state", "filter_state", merge_schema=True
+        )
         # rows from legacy full-state rounds (mixed checkpoint mid-
         # migration) carry null _sr → coalesce to -1 so they lose to any
         # delta-era row; the migration commit writes full coverage stamped,
@@ -678,22 +665,7 @@ class CrawlScheduler:
         the dominant cost. This is exactly Iceberg's append-snapshot pattern
         on plain parquet; with Iceberg, it's one ``append()`` per round and
         this union is a single snapshot read."""
-        base_rnd = self.store.latest_compact(upto=upto_rnd)
-        if base_rnd is None:
-            return self._read_deltas(upto_rnd, "url_seen_new")
-        base = self.store.read_compact_table(self.spark, base_rnd, "url_seen")
-        if base_rnd == upto_rnd:
-            return base
-        if not self.store.has_round(base_rnd + 1):
-            raise ValueError(
-                f"url_seen through round {upto_rnd}: delta rounds "
-                f"{base_rnd + 1}..{upto_rnd} were expired — the seen set "
-                "below the expiry point is only materialized at compaction "
-                "snapshots; read at a snapshot round or at the current head"
-            )
-        return base.unionByName(
-            self._read_deltas(upto_rnd, "url_seen_new", from_rnd=base_rnd + 1)
-        )
+        return self._read_state(upto_rnd, "url_seen", "url_seen_new")
 
     def _read_content_seen(self, upto_rnd: int) -> DataFrame:
         """Known content fingerprints = union of per-round append-only
@@ -701,45 +673,80 @@ class CrawlScheduler:
         extra["content_dedup"] is on — recorded as a round-0 config facet,
         so every commit of an enabled checkpoint carries the table).
         Same base+delta shape as url_seen."""
-        base_rnd = self._compact_base_for(upto_rnd, "content_seen")
-        if base_rnd is None:
-            if upto_rnd >= 1 and not self.store.has_round(1):
-                raise ValueError(
-                    f"content_seen through round {upto_rnd}: delta rounds "
-                    "below the expiry point were reclaimed and no compaction "
-                    "snapshot carries content_seen — compact() before "
-                    "expiring on a content_dedup checkpoint"
-                )
-            return self._read_deltas(upto_rnd, "content_seen_new")
-        base = self.store.read_compact_table(self.spark, base_rnd, "content_seen")
-        if base_rnd == upto_rnd:
-            return base
-        if not self.store.has_round(base_rnd + 1):
-            raise ValueError(
-                f"content_seen through round {upto_rnd}: delta rounds "
-                f"{base_rnd + 1}..{upto_rnd} were expired — read at a "
-                "snapshot round or at the current head"
-            )
-        return base.unionByName(
-            self._read_deltas(upto_rnd, "content_seen_new", from_rnd=base_rnd + 1)
-        )
+        return self._read_state(upto_rnd, "content_seen", "content_seen_new")
 
-    def _empty_content_delta(self) -> DataFrame:
-        return self.spark.createDataFrame([], "fp string")
+    def _open_filter_state(self, prev: int) -> DataFrame:
+        """Effective filter_state at round ``prev`` for a round that admits
+        URLs, persisted: TWO consumers (probe + insert_delta) would
+        otherwise each recompute the delta-union agg. The geometry guard
+        runs on the first call of this scheduler instance. The caller
+        unpersists it after the commit."""
+        filter_state = self._read_filter_state(prev).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        if not self._geometry_checked:
+            self._verify_filter_geometry(filter_state)
+            self._geometry_checked = True
+        return filter_state
+
+    def _admit(
+        self, candidates: DataFrame, prev: int, filter_state: DataFrame
+    ) -> tuple[DataFrame, DataFrame]:
+        """URL-seen admission of annotated candidates against the state
+        committed at round ``prev``: bloom/cuckoo probe → exact backstop.
+        Returns ``(new_urls, flagged)``, both cached; the caller
+        unpersists them after the commit.
+
+        ``flagged`` (the probe output) is persisted: three consumers (the
+        bloom-positive count, the broadcast of maybe urls inside the
+        inverted backstop, and the anti-join probe side) would each re-run
+        the Arrow probe stage; it is bounded by the candidate fan-out. The
+        bloom-positive count is taken BEFORE the backstop because it picks
+        the strategy (exact_new): small (the steady state: the bloom
+        absorbs genuinely new URLs, rediscoveries are bounded by fan-out) →
+        inverted broadcast check that never SHUFFLES the 10^10-row seen
+        set; large → plain hash anti-join.
+
+        The eager ``new_urls.count()`` populates the new_urls cache AND
+        (through its lineage) the round's batch cache and pending persist
+        before commit_round launches the state writes CONCURRENTLY:
+        concurrent jobs hitting an unpopulated cached partition on
+        DIFFERENT executors each recompute the full lineage — with a real
+        HTTP fetcher that would re-fetch the batch once per write job (a
+        politeness violation, not just waste)."""
+        flagged = self.bloom.probe(candidates, filter_state).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        probe_count = flagged.filter(F.col("maybe_seen")).count()
+        new_urls = exact_new(
+            flagged, self._read_url_seen(prev), probe_count=probe_count
+        ).cache()
+        new_urls.count()
+        return new_urls, flagged
+
+    def _empty(self, name: str) -> DataFrame:
+        return self.spark.createDataFrame([], EMPTY_DELTAS[name])
+
+    def _commit(self, rnd: int, tables: dict[str, DataFrame], counters_fn) -> dict:
+        """Commit round ``rnd``: the tables the round wrote, plus an EMPTY
+        delta (EMPTY_DELTAS) for every state table it did not touch —
+        content_seen_new only on a content_dedup checkpoint, where it is a
+        round-0 facet and every round dir must carry it."""
+        names = ["frontier_new", *EMPTY_DELTAS]
+        if not self.cfg.extra.get("content_dedup"):
+            names.remove("content_seen_new")
+        return self.store.commit_round(
+            rnd,
+            {n: tables[n] if n in tables else self._empty(n) for n in names},
+            counters_fn=counters_fn,
+        )
 
     # -- the round ----------------------------------------------------------
 
     def run_round(self, rnd: int) -> dict:
         """Execute round ``rnd`` on top of committed round ``rnd - 1``."""
         prev = rnd - 1
-        url_seen = self._read_url_seen(prev)
-        # effective state (latest bitset per partition over the append-only
-        # deltas), persisted for the round: TWO consumers (probe +
-        # insert_delta) would otherwise each recompute the delta-union agg
-        filter_state = self._read_filter_state(prev).persist(StorageLevel.MEMORY_AND_DISK)
-        if not self._geometry_checked:
-            self._verify_filter_geometry(filter_state)
-            self._geometry_checked = True
+        filter_state = self._open_filter_state(prev)
         host_state = self._read_host_state(prev)
 
         # persisted for the round: TWO consumers (the hot-host plan agg and
@@ -845,33 +852,9 @@ class CrawlScheduler:
         else:
             discovered = self._annotate(canon_links).dropDuplicates(["url"])
 
-        # 5. URL-seen: bloom prefilter → exact backstop. The eager count
-        # populates the new_urls cache AND (through its lineage) the batch
-        # cache + pending persist before commit_round launches the state
-        # writes CONCURRENTLY: concurrent jobs hitting an unpopulated
-        # cached partition on DIFFERENT executors each recompute the full
-        # lineage — with a real HTTP fetcher that would re-fetch the batch
-        # once per write job (a politeness violation, not just waste).
-        # persist the probe output: three consumers (the maybe-count below,
-        # the broadcast of maybe urls inside the inverted backstop, and the
-        # anti-join probe side) would each re-run the Arrow probe stage.
-        # Bounded by the round's discovered fan-out (batch × span_cap).
-        flagged = self.bloom.probe(discovered, filter_state).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        # bloom-positive volume this round — picks the backstop strategy:
-        # small (the steady-state: the bloom absorbs genuinely-new URLs,
-        # rediscoveries are bounded by fan-out) → inverted broadcast check
-        # that never SHUFFLES the 10^10-row seen set; large → plain hash
-        # anti-join fallback
-        probe_count = flagged.filter(F.col("maybe_seen")).count()
-        new_urls = exact_new(
-            flagged,
-            url_seen,
-            probe_count=probe_count,
-            broadcast_max=int(self.cfg.extra.get("backstop_broadcast_max", 1_000_000)),
-        ).cache()
-        new_urls.count()
+        # 5. URL-seen: bloom prefilter → exact backstop, its cache filled
+        #    before the concurrent commit writes (see _admit)
+        new_urls, flagged = self._admit(discovered, prev, filter_state)
 
         # 6. frontier merge is append-only: the round's crawl_log IS the
         #    done-marking (derived pending excludes it); only the newly
@@ -943,7 +926,7 @@ class CrawlScheduler:
         }
         if content_seen_new is not None:
             tables["content_seen_new"] = content_seen_new
-        counters = self.store.commit_round(rnd, tables, counters_fn=_counters)
+        counters = self._commit(rnd, tables, _counters)
         batch.unpersist()
         new_urls.unpersist()
         pending.unpersist()
@@ -988,11 +971,7 @@ class CrawlScheduler:
         if prev is None:
             raise ValueError("init_from_seeds first")
         rnd = prev + 1
-        url_seen = self._read_url_seen(prev)
-        filter_state = self._read_filter_state(prev).persist(StorageLevel.MEMORY_AND_DISK)
-        if not self._geometry_checked:
-            self._verify_filter_geometry(filter_state)
-            self._geometry_checked = True
+        filter_state = self._open_filter_state(prev)
         host_state = self._read_host_state(prev)
 
         canon = (
@@ -1001,20 +980,7 @@ class CrawlScheduler:
             .select("url")
             .dropDuplicates(["url"])
         )
-        cand = self._annotate(canon)
-        flagged = self.bloom.probe(cand, filter_state).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        probe_count = flagged.filter(F.col("maybe_seen")).count()
-        # eager cache fill before the concurrent commit writes (see
-        # run_round's new_urls note)
-        new_urls = exact_new(
-            flagged,
-            url_seen,
-            probe_count=probe_count,
-            broadcast_max=int(self.cfg.extra.get("backstop_broadcast_max", 1_000_000)),
-        ).cache()
-        new_urls.count()
+        new_urls, flagged = self._admit(self._annotate(canon), prev, filter_state)
 
         frontier_new = (
             new_urls.withColumn("priority", F.lit(float(priority)))
@@ -1029,10 +995,6 @@ class CrawlScheduler:
             frontier_new = self._cap_pending_per_host(
                 frontier_new, self._read_pending(prev)
             )
-        crawl_log = self.spark.createDataFrame(
-            [],
-            "round int, seq int, url string, host string, priority double, attempt int",
-        )
 
         def _counters(read) -> dict:
             return {
@@ -1041,7 +1003,9 @@ class CrawlScheduler:
                 "merge_only": True,
             }
 
-        counters = self.store.commit_round(
+        # a zero-schedule round: the empty batch leaves the host_state
+        # delta with only the hosts first discovered here
+        counters = self._commit(
             rnd,
             {
                 "frontier_new": frontier_new,
@@ -1050,16 +1014,10 @@ class CrawlScheduler:
                     new_urls, filter_state, rnd
                 ),
                 "host_state": self._host_state_delta(
-                    host_state, crawl_log, new_urls, rnd
-                ),
-                "crawl_log": crawl_log,
-                **(
-                    {"content_seen_new": self._empty_content_delta()}
-                    if self.cfg.extra.get("content_dedup")
-                    else {}
+                    host_state, self._empty("crawl_log"), new_urls, rnd
                 ),
             },
-            counters_fn=_counters,
+            _counters,
         )
         new_urls.unpersist()
         flagged.unpersist()
@@ -1120,21 +1078,6 @@ class CrawlScheduler:
             (F.col("attempt") + 1).alias("attempt"),
         ).select(*FRONTIER_COLS)
 
-        crawl_log = self.spark.createDataFrame(
-            [],
-            "round int, seq int, url string, host string, priority double, attempt int",
-        )
-        empty_seen = self.spark.createDataFrame(
-            [], "partition int, url_id long, url string"
-        )
-        # host state is untouched by a requeue → empty delta (append-only)
-        empty_host_delta = self.spark.createDataFrame(
-            [],
-            "host string, min_delay_rounds int, max_in_flight int, "
-            "last_scheduled_round int, min_delay_seconds double, "
-            "last_fetch_ts double, _sr int",
-        )
-
         def _counters(read) -> dict:
             return {
                 "scheduled": 0,
@@ -1143,33 +1086,15 @@ class CrawlScheduler:
                 "merge_only": True,
             }
 
-        # a requeue touches no filter bits → EMPTY delta (append-only),
-        # not a rewrite of unchanged state; one full stamped write only
-        # when migrating a legacy full-rewrite checkpoint
+        # a requeue touches no seen set, host state or filter bits → EMPTY
+        # deltas (append-only), not a rewrite of unchanged state; one full
+        # stamped filter write only when migrating a legacy full-rewrite
+        # checkpoint
+        tables = {"frontier_new": retry_rows}
         filter_eff = self._read_filter_state(prev)
         if getattr(self, "_filter_migrate", False):
-            filter_delta = filter_eff.withColumn("_sr", F.lit(rnd))
-        else:
-            filter_delta = self.spark.createDataFrame(
-                [], "partition int, bitset binary, _sr int"
-            )
-        counters = self.store.commit_round(
-            rnd,
-            {
-                "frontier_new": retry_rows,
-                "url_seen_new": empty_seen,
-                "filter_state": filter_delta,
-                "host_state": empty_host_delta,
-                "crawl_log": crawl_log,
-                **(
-                    {"content_seen_new": self._empty_content_delta()}
-                    if self.cfg.extra.get("content_dedup")
-                    else {}
-                ),
-            },
-            counters_fn=_counters,
-        )
-        return counters
+            tables["filter_state"] = filter_eff.withColumn("_sr", F.lit(rnd))
+        return self._commit(rnd, tables, _counters)
 
     def _cap_pending_per_host(
         self, frontier_new: DataFrame, pending: DataFrame

@@ -1,19 +1,16 @@
-"""HTML outlink extraction + RFC 3986 §5 reference resolution — pure
-Catalyst.
+"""HTML outlink extraction + RFC 3986 §5 reference resolution.
 
 The discovery step a real fetch loop runs on every HTML body: pull the
 link references out of the markup, resolve each against the page's
 effective base URL (the ``<base href>`` element when present, else the
 fetch URL), and hand absolute URLs to canonicalization
 (``functions/urls.py``) and the frontier merge.  Everything here is a
-scan-side projection — regexp extraction for the markup, and the RFC's
-reference-resolution algorithm (§5.2.2 transform, §5.2.3 merge, §5.2.4
-remove_dot_segments) available both as a nested Catalyst expression
-(``resolve_reference_expr`` — reference semantics, but CodegenFallback
-and therefore interpreted) and as the Arrow-batched twin the operators
-use (``resolve_reference_udf`` — ~100x cheaper per row, equality
-test-pinned).  No shuffle; at fetch-log scale the plan is
-embarrassingly parallel.
+scan-side projection — Catalyst regexp extraction for the markup, and
+the RFC's reference-resolution algorithm (§5.2.2 transform, §5.2.3
+merge, §5.2.4 remove_dot_segments) as one Arrow-batched UDF
+(``resolve_reference_udf`` over the per-row ``resolve_reference_one``,
+pinned by the RFC's own §5.4 vectors in tests/test_html.py).  No
+shuffle; at fetch-log scale the plan is embarrassingly parallel.
 
 Pinned semantics:
 
@@ -52,9 +49,6 @@ from pyspark.sql.functions import pandas_udf
 from ..frontier.sitemaps import xml_unescape_expr
 
 __all__ = [
-    "split_url_expr",
-    "remove_dot_segments_expr",
-    "resolve_reference_expr",
     "resolve_reference_one",
     "resolve_reference_udf",
     "extract_refs_expr",
@@ -64,136 +58,17 @@ __all__ = [
     "main_text",
 ]
 
-# RFC 3986 appendix B, group indices: 2 scheme, 4 authority, 5 path,
-# 7 query (fragment group intentionally unreferenced — dropped).
-_URL_RE = r"^(([^:/?#]+):)?(//([^/?#]*))?([^?#]*)(\?([^#]*))?(#(.*))?"
-
-
-def split_url_expr(col: Column) -> Column:
-    """URL → struct(scheme, authority, path, query); '' marks absent
-    (see module docstring for the empty-vs-absent collapse)."""
-    return F.struct(
-        F.regexp_extract(col, _URL_RE, 2).alias("scheme"),
-        F.regexp_extract(col, _URL_RE, 4).alias("authority"),
-        F.regexp_extract(col, _URL_RE, 5).alias("path"),
-        F.regexp_extract(col, _URL_RE, 7).alias("query"),
-    )
-
-
-def remove_dot_segments_expr(path: Column) -> Column:
-    """RFC 3986 §5.2.4 over an ABSOLUTE path (or ''), as an aggregate
-    fold over the '/'-split segments: '.' skips, '..' pops (clamped at
-    root), anything else — including interior empty segments — appends;
-    inputs ending in '/', '/.' or '/..' keep directory form."""
-    ends_dir = (
-        path.endswith("/") | path.endswith("/.") | path.endswith("/..")
-    )
-    segs = F.split(path, "/")
-    # drop the leading '' of an absolute path and the trailing '' a
-    # final '/' produces (directory form is re-attached from ends_dir)
-    work = F.slice(segs, 2, F.greatest(F.size(segs) - 1, F.lit(0)))
-    work = F.when(
-        path.endswith("/"), F.slice(work, 1, F.greatest(F.size(work) - 1, F.lit(0)))
-    ).otherwise(work)
-    folded = F.aggregate(
-        work,
-        F.expr("CAST(array() AS array<string>)"),
-        lambda acc, s: F.when(s == ".", acc)
-        .when(s == "..", F.slice(acc, 1, F.greatest(F.size(acc) - 1, F.lit(0))))
-        .otherwise(F.concat(acc, F.array(s))),
-    )
-    body = F.array_join(folded, "/")
-    out = F.concat(
-        F.lit("/"),
-        body,
-        F.when(ends_dir & (F.size(folded) > 0), F.lit("/")).otherwise(F.lit("")),
-    )
-    return F.when(path == "", F.lit("")).otherwise(out)
-
-
-def _rebuild(scheme: Column, authority: Column, path: Column, query: Column) -> Column:
-    """Recompose scheme://authority/path?query; '' components vanish."""
-    return F.concat(
-        F.when(scheme != "", F.concat(scheme, F.lit(":"))).otherwise(F.lit("")),
-        F.when(authority != "", F.concat(F.lit("//"), authority)).otherwise(
-            F.lit("")
-        ),
-        path,
-        F.when(query != "", F.concat(F.lit("?"), query)).otherwise(F.lit("")),
-    )
-
-
-def resolve_reference_expr(base: Column, ref: Column) -> Column:
-    """RFC 3986 §5.2.2 reference resolution → absolute URL string, or
-    NULL for pure-fragment / NULL references.  ``base`` must itself be
-    absolute (a fetch URL always is)."""
-    # strip the fragment from both inputs up front (crawler semantics)
-    ref_nf = F.regexp_replace(ref, "#.*$", "")
-    b = split_url_expr(F.regexp_replace(base, "#.*$", ""))
-    r = split_url_expr(ref_nf)
-    rds = remove_dot_segments_expr
-    # §5.2.3 merge: base path up to and including its last '/', then the
-    # relative path; an authority with an empty path merges onto '/'
-    base_dir = F.when(b["path"] == "", F.lit("/")).otherwise(
-        F.regexp_replace(b["path"], "[^/]*$", "")
-    )
-    merged = F.concat(base_dir, r["path"])
-    resolved = (
-        # R has a scheme: take R wholesale (dot-removal only when the
-        # path is absolute — opaque paths like mailto:user stay intact)
-        F.when(
-            r["scheme"] != "",
-            _rebuild(
-                r["scheme"],
-                r["authority"],
-                F.when(r["path"].startswith("/"), rds(r["path"])).otherwise(
-                    r["path"]
-                ),
-                r["query"],
-            ),
-        )
-        # network-path reference '//host/...': base scheme + R's rest
-        .when(
-            r["authority"] != "",
-            _rebuild(b["scheme"], r["authority"], rds(r["path"]), r["query"]),
-        )
-        # absolute-path reference
-        .when(
-            r["path"].startswith("/"),
-            _rebuild(b["scheme"], b["authority"], rds(r["path"]), r["query"]),
-        )
-        # empty path: base path; R's query if present, else base's
-        .when(
-            r["path"] == "",
-            _rebuild(
-                b["scheme"],
-                b["authority"],
-                b["path"],
-                F.when(r["query"] != "", r["query"]).otherwise(b["query"]),
-            ),
-        )
-        # relative-path reference: merge + dot-removal
-        .otherwise(
-            _rebuild(b["scheme"], b["authority"], rds(merged), r["query"])
-        )
-    )
-    is_fragment_only = (ref_nf == "") & ref.startswith("#")
-    return F.when(
-        ref.isNull() | is_fragment_only, F.lit(None).cast("string")
-    ).otherwise(resolved)
-
-
 # ---------------------------------------------------------------------------
-# Arrow-batched resolver twin (r6). resolve_reference_expr is a ~500-node
-# Catalyst tree whose HOF fold (remove_dot_segments) makes it CodegenFallback:
-# it is evaluated INTERPRETED, node by node, per row — measured ~34s for the
-# 3.75M-link discovery stream at sf1.0 for a single evaluation, and any
-# downstream expression referencing `resolved` multiplies it.  The batch twin
-# below implements the SAME RFC 3986 §5.2 algorithm per row in Python behind
-# one Arrow exchange (~1-2us/row) and doubles as a hard optimizer barrier: a
-# column produced by ArrowEvalPython can never be re-inlined downstream.
-# Equality with resolve_reference_expr is pinned by tests/test_html.py over
-# the full RFC vector battery.
+# Arrow-batched resolver (r6).  The RFC 3986 §5.2 algorithm runs per row in
+# Python behind one Arrow exchange (~1-2us/row).  A pure-Catalyst version was
+# kept as the reference until it was deleted: its ~500-node tree with a HOF
+# fold (remove_dot_segments) is CodegenFallback, so it ran INTERPRETED, node
+# by node, per row — ~34s for the 3.75M-link discovery stream at sf1.0 for a
+# single evaluation, multiplied by any downstream expression that re-inlined
+# `resolved`.  The UDF is also a hard optimizer barrier: a column produced by
+# ArrowEvalPython can never be re-inlined downstream.  tests/test_html.py
+# pins it (and the per-row resolve_reference_one) to the RFC §5.4 vectors
+# plus the NULL/fragment/empty-query edge grammar.
 # ---------------------------------------------------------------------------
 
 _URL_RE_PY = re.compile(r"^(([^:/?#]+):)?(//([^/?#]*))?([^?#]*)(\?([^#]*))?")
@@ -242,7 +117,9 @@ def _rebuild_py(scheme: str, authority: str, path: str, query: str) -> str:
 
 
 def resolve_reference_one(base: str | None, ref: str | None) -> str | None:
-    """Per-row twin of :func:`resolve_reference_expr` (RFC 3986 §5.2.2)."""
+    """RFC 3986 §5.2.2 reference resolution of one (base, ref) pair →
+    absolute URL string, or None for pure-fragment / None references.
+    ``base`` must itself be absolute (a fetch URL always is)."""
     if ref is None or base is None:
         return None
     ref_nf = _FRAG_RE_PY.sub("", ref)
@@ -327,10 +204,9 @@ def extract_outlinks(
     """
     page = F.col(url_col)
     html = F.col(html_col)
-    # Arrow-batched resolver (resolve_reference_udf): the Catalyst tree is
-    # CodegenFallback and costs ~100x more per row interpreted (r6); the
-    # UDF result is also a hard barrier, so downstream consumers of
-    # `resolved` can never re-inline the resolution tree.
+    # Arrow-batched resolver (resolve_reference_udf, see its block
+    # comment): its result is a hard barrier, so downstream consumers of
+    # `resolved` can never re-inline the resolution.
     eff_base = F.when(
         base_href_expr(html) != "",
         resolve_reference_udf(page, base_href_expr(html)),

@@ -233,6 +233,21 @@ def autocomplete(
     )
 
 
+def _with_delta_doclens(
+    doclens: DataFrame, total_tokens: float, delta_p: DataFrame
+) -> tuple[DataFrame, float]:
+    """BM25 corpus statistics with uploaded docs merged in: their exact
+    doclens (tf summed per doc over the upload-scale delta postings) are
+    appended, and their token mass is added to ``total_tokens``.  The
+    doc_id types align the way merged_postings aligns them."""
+    d_lens = delta_p.groupBy("doc_id").agg(F.sum("tf").alias("doclen"))
+    if dict(doclens.dtypes)["doc_id"] != dict(d_lens.dtypes)["doc_id"]:
+        doclens = doclens.withColumn("doc_id", F.col("doc_id").cast("string"))
+        d_lens = d_lens.withColumn("doc_id", F.col("doc_id").cast("string"))
+    delta_tokens = float(delta_p.agg(F.sum("tf")).collect()[0][0] or 0)
+    return doclens.unionByName(d_lens), total_tokens + delta_tokens
+
+
 def search(
     spark: SparkSession,
     index_dir: str,
@@ -323,24 +338,6 @@ def search(
         if os.path.isdir(doclens_dir) and "total_tokens" in meta:
             doclens = spark.read.parquet(doclens_dir)
             total_tokens = float(meta["total_tokens"])
-            if delta_p is not None:
-                # uploaded docs: exact doclens + mass from the (upload-
-                # scale) delta postings; id types align like
-                # merged_postings does
-                d_lens = delta_p.groupBy("doc_id").agg(
-                    F.sum("tf").alias("doclen")
-                )
-                if dict(doclens.dtypes)["doc_id"] != dict(d_lens.dtypes)["doc_id"]:
-                    doclens = doclens.withColumn(
-                        "doc_id", F.col("doc_id").cast("string")
-                    )
-                    d_lens = d_lens.withColumn(
-                        "doc_id", F.col("doc_id").cast("string")
-                    )
-                doclens = doclens.unionByName(d_lens)
-                total_tokens += float(
-                    delta_p.agg(F.sum("tf")).collect()[0][0] or 0
-                )
         else:
             # pre-doclens index layout: derive the stats from the FULL
             # (unpruned) postings — one extra corpus scan.  Passing None
@@ -353,21 +350,10 @@ def search(
             total_tokens = float(
                 postings.agg(F.sum("tf")).collect()[0][0] or 0
             )
-            if delta_p is not None:
-                d_lens = delta_p.groupBy("doc_id").agg(
-                    F.sum("tf").alias("doclen")
-                )
-                if dict(doclens.dtypes)["doc_id"] != dict(d_lens.dtypes)["doc_id"]:
-                    doclens = doclens.withColumn(
-                        "doc_id", F.col("doc_id").cast("string")
-                    )
-                    d_lens = d_lens.withColumn(
-                        "doc_id", F.col("doc_id").cast("string")
-                    )
-                doclens = doclens.unionByName(d_lens)
-                total_tokens += float(
-                    delta_p.agg(F.sum("tf")).collect()[0][0] or 0
-                )
+        if delta_p is not None:
+            doclens, total_tokens = _with_delta_doclens(
+                doclens, total_tokens, delta_p
+            )
         results = bm25_search(
             pruned, terms, total_docs, k=k,
             doclens=doclens, total_tokens=total_tokens,

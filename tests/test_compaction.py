@@ -1,6 +1,10 @@
 """Compaction is a pure read optimization: a crawl with a mid-run compaction
 must be bit-identical to one without."""
 
+import shutil
+
+import pytest
+
 from cord19_crawler_spark.datagen import generate_documents, seed_urls
 from cord19_crawler_spark.frontier import CrawlScheduler, SchedulerConfig
 
@@ -103,17 +107,11 @@ def test_prefix_reads_between_two_compaction_points_after_expiry(spark, tmp_path
     assert ex.requeue_failures(fdf)["requeued"] > 0
     # historical url_seen below the expiry point is NOT reconstructable —
     # must fail loudly, not return silently-wrong rows
-    import pytest
-
     with pytest.raises(ValueError, match="expired"):
         ex._read_url_seen(4).count()
 
 
 def test_expire_refuses_without_cumulative_snapshot(spark, tmp_path):
-    import shutil
-
-    import pytest
-
     docs = generate_documents(spark, 100, partitions=2).cache()
     s = CrawlScheduler(spark, docs, str(tmp_path / "ck"), _cfg())
     s.run(2, seeds=seed_urls(spark, 8, 100))
@@ -148,13 +146,55 @@ def test_expire_on_compact_auto(spark, tmp_path):
     assert auto.seen_set() == plain.seen_set()
 
 
+@pytest.fixture(scope="module")
+def expired_checkpoint(spark, tmp_path_factory):
+    """A content_dedup crawl (so all six state tables exist) compacted at
+    round 2, with round 1 expired."""
+    docs = generate_documents(spark, 100, partitions=2).cache()
+    root = str(tmp_path_factory.mktemp("expired") / "ck")
+    cfg = _cfg()
+    cfg.extra = {"content_dedup": True}
+    s = CrawlScheduler(spark, docs, root, cfg)
+    s.run(2, seeds=seed_urls(spark, 8, 100))
+    assert s.compact() == 2
+    assert s.expire() == [1]
+    return docs, root, cfg
+
+
+@pytest.mark.parametrize(
+    "table,reader",
+    [
+        ("url_seen", "_read_url_seen"),
+        ("content_seen", "_read_content_seen"),
+        ("host_state", "_read_host_state"),
+        ("filter_state", "_read_filter_state"),
+        ("crawl_log", "_read_crawl_log"),
+        ("frontier_all", "_read_frontier_all"),
+    ],
+)
+def test_expired_read_without_snapshot_table_fails_loud(
+    spark, tmp_path, expired_checkpoint, table, reader
+):
+    """Once the only snapshot that could serve a table's expired rounds
+    lacks that table (a legacy snapshot), every reader refuses with a
+    ValueError naming the table — never a raw missing-path read, never
+    silently fewer rows — below the expiry point and at the head."""
+    docs, root, cfg = expired_checkpoint
+    ck = str(tmp_path / "ck")
+    shutil.copytree(root, ck)
+    s = CrawlScheduler(spark, docs, ck, cfg)
+    shutil.rmtree(s.store.compact_table_path(2, table))
+    for upto in (1, 2):
+        with pytest.raises(ValueError, match=rf"{table} through round {upto}: .*expired"):
+            getattr(s, reader)(upto)
+
+
 # ---------------------------------------------------------------------------
 # size-tiered segment compaction planner (operators/delta.py)
 # ---------------------------------------------------------------------------
 
 
 def test_plan_compaction_tiers_and_groups(spark):
-    import pytest
     from cord19_crawler_spark.operators.delta import plan_compaction
 
     # tier 0: sizes < 2*min ... ; min_size=10, fanout=2

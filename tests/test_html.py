@@ -1,13 +1,15 @@
 """HTML outlink extraction + RFC 3986 reference resolution
-(functions/html.py): the RFC's own §5.4 normal/abnormal test vectors,
+(functions/html.py): the RFC's own §5.4 normal/abnormal test vectors and
+edge grammar through both the per-row resolver and its Arrow-batched UDF,
 dot-segment edges, base-href handling, and the extraction grammar."""
 
 import pyspark.sql.functions as F
 
 from cord19_crawler_spark.functions.html import (
+    _remove_dot_segments_py,
     extract_outlinks,
-    remove_dot_segments_expr,
-    resolve_reference_expr,
+    resolve_reference_one,
+    resolve_reference_udf,
 )
 
 BASE = "http://a/b/c/d;p?q"
@@ -60,65 +62,65 @@ ABNORMAL = [
     ("http:g", "http:g"),
 ]
 
+# (base, ref, want): the NULL / fragment / empty-query / opaque-scheme
+# edge grammar beyond the RFC tables.
+EDGES = [
+    (BASE, "", "http://a/b/c/d;p?q"),
+    (BASE, "#", None),
+    (BASE, "#frag", None),
+    (BASE, "g?y", "http://a/b/c/g?y"),
+    (BASE, "?y", "http://a/b/c/d;p?y"),
+    (BASE, "//g", "http://g"),
+    (BASE, "//g/x/../y", "http://g/y"),
+    (BASE, "http:g", "http:g"),
+    (BASE, "mailto:u@x.com", "mailto:u@x.com"),
+    (BASE, "javascript:void(0)", "javascript:void(0)"),
+    (BASE, "g#s", "http://a/b/c/g"),
+    (BASE, "./", "http://a/b/c/"),
+    (BASE, "..", "http://a/b/"),
+    (BASE, ".", "http://a/b/c/"),
+    (BASE, "a?", "http://a/b/c/a"),            # empty query collapses
+    (BASE, "a?&", "http://a/b/c/a?&"),
+    (BASE, "/x//../y", "http://a/x/y"),        # '..' pops the empty segment
+    (BASE, "data:text/plain,hi", "data:text/plain,hi"),
+    (BASE, "g;p=1?y#s", "http://a/b/c/g;p=1?y"),
+    ("http://a/b/c/d;p?q#bfrag", "g", "http://a/b/c/g"),  # base fragment
+    ("http://h", "g", "http://h/g"),           # base with empty path
+    ("http://h/x/", "", "http://h/x/"),
+    (BASE, None, None),
+]
 
-def _resolve_all(spark, base, cases):
-    df = spark.createDataFrame(
-        [(base, r) for r, _ in cases], "base string, ref string"
-    )
-    got = (
-        df.select(
-            "ref",
-            resolve_reference_expr(F.col("base"), F.col("ref")).alias("out"),
-        )
-        .collect()
-    )
-    return {r["ref"]: r["out"] for r in got}
+
+def _check_both(spark, rows):
+    """Every (base, ref, want) row through resolve_reference_one and
+    through the Arrow-batched resolve_reference_udf."""
+    bad = [(b, r, got, w) for b, r, w in rows
+           if (got := resolve_reference_one(b, r)) != w]
+    assert not bad, bad[:5]
+    df = spark.createDataFrame(rows, "base string, ref string, want string")
+    got = df.select(
+        "base", "ref", "want",
+        resolve_reference_udf(F.col("base"), F.col("ref")).alias("out"),
+    ).collect()
+    assert len(got) == len(rows)
+    bad = [(r["base"], r["ref"], r["out"], r["want"]) for r in got
+           if r["out"] != r["want"]]
+    assert not bad, bad[:5]
 
 
 def test_rfc3986_normal_vectors(spark):
-    got = _resolve_all(spark, BASE, NORMAL)
-    for ref, want in NORMAL:
-        assert got[ref] == want, (ref, got[ref], want)
+    _check_both(spark, [(BASE, r, w) for r, w in NORMAL])
 
 
 def test_rfc3986_abnormal_vectors(spark):
-    got = _resolve_all(spark, BASE, ABNORMAL)
-    for ref, want in ABNORMAL:
-        assert got[ref] == want, (ref, got[ref], want)
+    _check_both(spark, [(BASE, r, w) for r, w in ABNORMAL])
 
 
-def test_resolver_udf_matches_expr(spark):
-    """The Arrow-batched resolver twin (resolve_reference_udf — the one
-    the operators run, r6) must agree with the Catalyst reference
-    implementation on the full RFC battery plus the NULL/fragment/edge
-    grammar."""
-    from cord19_crawler_spark.functions.html import resolve_reference_udf
-
-    extra = [
-        "", "#", "#frag", "g?y", "?y", "//g", "//g/x/../y", "http:g",
-        "mailto:u@x.com", "javascript:void(0)", "g#s", "./", "..", ".",
-        "a?", "a?&", "/x//../y", "data:text/plain,hi", "g;p=1?y#s",
-    ]
-    refs = [r for r, _ in NORMAL + ABNORMAL] + extra
-    rows = [(BASE, r) for r in refs] + [
-        ("http://a/b/c/d;p?q#bfrag", "g"),   # base with fragment
-        ("http://h", "g"),                    # base with empty path
-        ("http://h/x/", ""),
-        (BASE, None),
-    ]
-    df = spark.createDataFrame(rows, "base string, ref string")
-    both = df.select(
-        "base",
-        "ref",
-        resolve_reference_expr(F.col("base"), F.col("ref")).alias("e"),
-        resolve_reference_udf(F.col("base"), F.col("ref")).alias("u"),
-    ).collect()
-    diffs = [(r["base"], r["ref"], r["e"], r["u"]) for r in both
-             if r["e"] != r["u"]]
-    assert not diffs, diffs[:5]
+def test_resolver_edge_grammar(spark):
+    _check_both(spark, EDGES)
 
 
-def test_remove_dot_segments_edges(spark):
+def test_remove_dot_segments_edges():
     cases = [
         ("/a/b/c/./../../g", "/a/g"),       # RFC §5.2.4's own example
         ("/mid/content=5/../6", "/mid/6"),  # the other RFC example
@@ -128,11 +130,8 @@ def test_remove_dot_segments_edges(spark):
         ("/a//b/./c", "/a//b/c"),           # interior empty kept
         ("/a/b/..", "/a/"),
     ]
-    df = spark.createDataFrame(cases, "p string, want string")
-    bad = df.filter(
-        remove_dot_segments_expr(F.col("p")) != F.col("want")
-    ).count()
-    assert bad == 0
+    for path, want in cases:
+        assert _remove_dot_segments_py(path) == want, path
 
 
 HTML_DOC = """<html><head>

@@ -105,13 +105,9 @@ def test_index_statistics_sink(index_dir):
     assert 0 < stats["papers_per_second"] < 1000
 
 
-def test_bm25_pre_doclens_fallback_full_corpus_stats(
-    spark, index_dir, tmp_path
-):
-    """A pre-doclens index layout (no doclens dir, no total_tokens meta)
-    must fall back to corpus-wide doclen/token-mass statistics — NOT the
-    barrel-pruned postings, which cover only the query words' barrels
-    and skew BM25 length normalization (r5 ADVICE finding)."""
+def _pre_doclens_copy(index_dir, tmp_path):
+    """A copy of the index in the pre-doclens layout: no doclens dir, no
+    total_tokens meta."""
     import shutil
 
     legacy = str(tmp_path / "legacy_idx")
@@ -121,6 +117,17 @@ def test_bm25_pre_doclens_fallback_full_corpus_stats(
     meta = json.load(open(meta_path))
     del meta["total_tokens"]
     json.dump(meta, open(meta_path, "w"))
+    return legacy
+
+
+def test_bm25_pre_doclens_fallback_full_corpus_stats(
+    spark, index_dir, tmp_path
+):
+    """A pre-doclens index layout (no doclens dir, no total_tokens meta)
+    must fall back to corpus-wide doclen/token-mass statistics — NOT the
+    barrel-pruned postings, which cover only the query words' barrels
+    and skew BM25 length normalization (r5 ADVICE finding)."""
+    legacy = _pre_doclens_copy(index_dir, tmp_path)
 
     want = [
         (r["doc_id"], round(r["score"], 6))
@@ -135,3 +142,39 @@ def test_bm25_pre_doclens_fallback_full_corpus_stats(
         ).collect()
     ]
     assert got == want
+
+
+def test_bm25_delta_merge_both_doclens_layouts(spark, index_dir, tmp_path):
+    """An upload merged at read time (delta_docs) enters BM25's corpus
+    statistics — its doclen and token mass — exactly as if it had been
+    indexed: with the doclens side table and with the pre-doclens
+    fallback alike, the scores equal those of an index rebuilt with it."""
+    upload = (99, "covid breakthrough covid covid covid vaccine")
+    fresh = spark.createDataFrame([upload], "doc_id long, text string")
+    rebuilt = str(tmp_path / "rebuilt_idx")
+    rows = [
+        (1, "covid vaccine study results covid"),
+        (2, "vaccine trials in europe"),
+        (3, "weather patterns and climate"),
+        (4, "covid covid covid transmission"),
+        (5, "testing vaccines for covid variants"),
+        upload,
+    ]
+    build_index(
+        spark, spark.createDataFrame(rows, "doc_id long, text string"),
+        rebuilt, num_barrels=4,
+    )
+
+    def ranked(idx, delta):
+        return [
+            (str(r["doc_id"]), round(r["score"], 6))
+            for r in search(
+                spark, idx, "covid vaccine", k=None, ranker="bm25",
+                delta_docs=delta,
+            ).collect()
+        ]
+
+    want = ranked(rebuilt, None)
+    assert want[0][0] == "99"
+    assert ranked(index_dir, fresh) == want
+    assert ranked(_pre_doclens_copy(index_dir, tmp_path), fresh) == want
