@@ -14,11 +14,33 @@ def _cfg():
                            min_delay_rounds=2, max_in_flight=3)
 
 
-def test_compaction_bit_identical(spark, tmp_path):
+@pytest.fixture(scope="module")
+def plain_crawl(spark, tmp_path_factory):
+    """The untouched reference crawl the compaction/expiry tests compare
+    against (300 docs, 10 seeds): run to round 5, copied aside as it stood
+    at round 5, then run on to round 6. Yields ``(docs, at5, at6, copy5,
+    round6)``: schedulers on the round-5 copy and on the round-6
+    checkpoint (read them only), a function that copies the round-5
+    checkpoint to a given path and opens it (for tests that commit more
+    rounds), and what ``run(6)`` returned on the way from 5 to 6."""
     docs = generate_documents(spark, 300, partitions=4).cache()
-
-    plain = CrawlScheduler(spark, docs, str(tmp_path / "plain"), _cfg())
+    base = tmp_path_factory.mktemp("plain")
+    plain = CrawlScheduler(spark, docs, str(base / "run"), _cfg())
     plain.run(5, seeds=seed_urls(spark, 10, 300))
+    shutil.copytree(str(base / "run"), str(base / "at5"))
+    round6 = plain.run(6)
+
+    def copy5(path):
+        shutil.copytree(str(base / "at5"), str(path))
+        return CrawlScheduler(spark, docs, str(path), _cfg())
+
+    at5 = CrawlScheduler(spark, docs, str(base / "at5"), _cfg())
+    yield docs, at5, plain, copy5, round6
+    docs.unpersist()
+
+
+def test_compaction_bit_identical(spark, tmp_path, plain_crawl):
+    docs, plain, _, _, round6 = plain_crawl
 
     comp = CrawlScheduler(spark, docs, str(tmp_path / "comp"), _cfg())
     comp.run(2, seeds=seed_urls(spark, 10, 300))
@@ -35,21 +57,16 @@ def test_compaction_bit_identical(spark, tmp_path):
     # resume AFTER compaction from a fresh scheduler object also identical
     resumed = CrawlScheduler(spark, docs, str(tmp_path / "comp"), _cfg())
     assert resumed.crawl_order() == plain.crawl_order()
-    more_r = resumed.run(6)
-    more_p = plain.run(6)
-    assert more_r == more_p
+    assert resumed.run(6) == round6  # what plain.run(6) returned
 
 
-def test_expiry_reclaims_rounds_bit_identical(spark, tmp_path):
+def test_expiry_reclaims_rounds_bit_identical(spark, tmp_path, plain_crawl):
     """Cumulative compaction + expire(): expired round dirs are deleted, yet
     crawl order, seen set, pending, resume, and requeue are all identical to
     an untouched run — storage is bounded by (rounds since last compact)."""
     import os
 
-    docs = generate_documents(spark, 300, partitions=4).cache()
-
-    plain = CrawlScheduler(spark, docs, str(tmp_path / "plain"), _cfg())
-    plain.run(5, seeds=seed_urls(spark, 10, 300))
+    docs, plain, _, copy5, _ = plain_crawl
 
     ex = CrawlScheduler(spark, docs, str(tmp_path / "ex"), _cfg())
     ex.run(3, seeds=seed_urls(spark, 10, 300))
@@ -78,18 +95,17 @@ def test_expiry_reclaims_rounds_bit_identical(spark, tmp_path):
     assert failed_e == failed_p
     fdf = spark.createDataFrame([(u,) for u in failed_e], "url string")
     ce = ex.requeue_failures(fdf)
-    cp = plain.requeue_failures(fdf)
+    cp = copy5(tmp_path / "plain").requeue_failures(fdf)
     assert ce["requeued"] == cp["requeued"] > 0
 
 
-def test_prefix_reads_between_two_compaction_points_after_expiry(spark, tmp_path):
+def test_prefix_reads_between_two_compaction_points_after_expiry(
+    spark, tmp_path, plain_crawl
+):
     """History reads whose base snapshot is an OLDER compact point and whose
     trailing delta rounds were expired under a NEWER cumulative snapshot are
     served from the newer snapshot (not a crash on deleted round dirs)."""
-    docs = generate_documents(spark, 300, partitions=4).cache()
-
-    plain = CrawlScheduler(spark, docs, str(tmp_path / "plain"), _cfg())
-    plain.run(6, seeds=seed_urls(spark, 10, 300))
+    docs, _, plain, _, _ = plain_crawl
 
     ex = CrawlScheduler(spark, docs, str(tmp_path / "ex"), _cfg())
     ex.run(2, seeds=seed_urls(spark, 10, 300))

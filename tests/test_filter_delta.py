@@ -11,6 +11,7 @@ O(touched) property by reading the committed parquet directly.
 """
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,6 +39,19 @@ def make_cfg(**kw):
 @pytest.fixture(scope="module")
 def docs(spark):
     return generate_documents(spark, N_DOCS, partitions=4).cache()
+
+
+@pytest.fixture(scope="module")
+def control(spark, docs, tmp_path_factory):
+    """The uninterrupted reference crawl (make_cfg(), 10 seeds): a
+    scheduler on a copy of it as it stood at round 3, and one on the crawl
+    run on to round 4. Tests only read them."""
+    base = tmp_path_factory.mktemp("control")
+    s = CrawlScheduler(spark, docs, str(base / "run"), make_cfg())
+    s.run(3, seeds=seed_urls(spark, 10, N_DOCS))
+    shutil.copytree(str(base / "run"), str(base / "at3"))
+    s.run(4)
+    return CrawlScheduler(spark, docs, str(base / "at3"), make_cfg()), s
 
 
 def _round_table(spark, ck, rnd, name):
@@ -91,13 +105,11 @@ def test_requeue_commits_empty_filter_delta(spark, docs, tmp_path):
     assert set(fs.columns) == {"partition", "bitset", "_sr"}
 
 
-def test_effective_state_equals_full_insert(spark, docs, tmp_path):
+def test_effective_state_equals_full_insert(spark, control):
     """Latest-row-per-partition over the deltas == the state a full
     per-round rewrite would have produced (replayed via insert() over the
     committed url_seen_new history)."""
-    ck = tmp_path / "ck"
-    sched = CrawlScheduler(spark, docs, str(ck), make_cfg())
-    sched.run(3, seeds=seed_urls(spark, 10, N_DOCS))
+    sched, _ = control
 
     eff = {
         r["partition"]: bytes(r["bitset"])
@@ -111,12 +123,12 @@ def test_effective_state_equals_full_insert(spark, docs, tmp_path):
     assert eff == rep
 
 
-def test_legacy_full_rewrite_checkpoint_migrates(spark, docs, tmp_path):
+def test_legacy_full_rewrite_checkpoint_migrates(spark, docs, control, tmp_path):
     """A checkpoint whose rounds each carry the FULL filter state without
     ``_sr`` (the pre-delta layout) resumes cleanly: the head is read as-is,
     the next commit writes one full stamped state, and the crawl matches an
     uninterrupted run bit-for-bit."""
-    ck_l, ck_c = tmp_path / "legacy", tmp_path / "control"
+    ck_l = tmp_path / "legacy"
     s = CrawlScheduler(spark, docs, str(ck_l), make_cfg())
     s.run(1, seeds=seed_urls(spark, 10, N_DOCS))
     # rewrite rounds 0..1 filter_state into the legacy layout: full
@@ -145,24 +157,23 @@ def test_legacy_full_rewrite_checkpoint_migrates(spark, docs, tmp_path):
     )
     assert r3.count() == touched3
 
-    control = CrawlScheduler(spark, docs, str(ck_c), make_cfg())
-    control.run(3, seeds=seed_urls(spark, 10, N_DOCS))
-    assert resumed.crawl_order() == control.crawl_order()
-    assert resumed.seen_set() == control.seen_set()
+    at3, _ = control
+    assert resumed.crawl_order() == at3.crawl_order()
+    assert resumed.seen_set() == at3.seen_set()
 
 
-def test_compact_snapshot_carries_filter_and_expiry_reads(spark, docs, tmp_path):
+def test_compact_snapshot_carries_filter_and_expiry_reads(
+    spark, docs, control, tmp_path
+):
     """After compact+expire, the effective filter state reads from the
     snapshot + surviving deltas and the crawl continues bit-identically."""
-    ck_a, ck_b = tmp_path / "a", tmp_path / "b"
-    s = CrawlScheduler(spark, docs, str(ck_a), make_cfg())
+    s = CrawlScheduler(spark, docs, str(tmp_path / "a"), make_cfg())
     s.run(2, seeds=seed_urls(spark, 10, N_DOCS))
     s.compact(2)
     assert s.store.has_compact_table(2, "filter_state")
     s.expire()
     s.run(4)
 
-    control = CrawlScheduler(spark, docs, str(ck_b), make_cfg())
-    control.run(4, seeds=seed_urls(spark, 10, N_DOCS))
-    assert s.crawl_order() == control.crawl_order()
-    assert s.seen_set() == control.seen_set()
+    _, at4 = control
+    assert s.crawl_order() == at4.crawl_order()
+    assert s.seen_set() == at4.seen_set()

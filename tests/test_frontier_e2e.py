@@ -7,6 +7,8 @@
 * politeness budget actually enforced
 """
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,8 +42,25 @@ def run_crawl(spark, docs, tmpdir, rounds=ROUNDS, partitions=4):
     return sched
 
 
-def test_two_run_equality(spark, docs, tmp_path):
-    s1 = run_crawl(spark, docs, tmp_path / "a")
+@pytest.fixture(scope="module")
+def full(spark, docs, tmp_path_factory):
+    """One uninterrupted ROUNDS-round reference crawl, shared by the tests
+    that only read it (and compare other runs against it)."""
+    return run_crawl(spark, docs, tmp_path_factory.mktemp("full"))
+
+
+@pytest.fixture(scope="module")
+def part2(spark, docs, tmp_path_factory):
+    """A crawl "killed" after round 2: the scheduler that ran it (read it
+    only) and a function that copies its checkpoint to a given path, for
+    a fresh scheduler to resume."""
+    path = tmp_path_factory.mktemp("part2") / "ck"
+    sched = run_crawl(spark, docs, path, rounds=2)
+    return sched, lambda dst: shutil.copytree(str(path), str(dst))
+
+
+def test_two_run_equality(spark, docs, full, part2, tmp_path):
+    s1 = full
     s2 = run_crawl(spark, docs, tmp_path / "b")
     assert s1.crawl_order() == s2.crawl_order()
     assert s1.seen_set() == s2.seen_set()
@@ -51,14 +70,14 @@ def test_two_run_equality(spark, docs, tmp_path):
     # equal fps; a shorter run → different fps (order is part of the hash)
     assert s1.crawl_order_fingerprint() == s2.crawl_order_fingerprint()
     assert s1.seen_fingerprint() == s2.seen_fingerprint()
-    s3 = run_crawl(spark, docs, tmp_path / "c", rounds=2)
+    s3, _ = part2
     assert s3.crawl_order_fingerprint() != s1.crawl_order_fingerprint()
     assert s3.seen_fingerprint() != s1.seen_fingerprint()
 
 
-def test_parallelism_invariance(spark, docs, tmp_path):
+def test_parallelism_invariance(spark, docs, full, tmp_path):
     """Same input, different physical partitioning → identical outputs."""
-    s1 = run_crawl(spark, docs, tmp_path / "p4")
+    s1 = full
     docs32 = docs.repartition(32)
     s2 = CrawlScheduler(spark, docs32, str(tmp_path / "p32"), make_cfg())
     s2.run(ROUNDS, seeds=seed_urls(spark, 10, N_DOCS))
@@ -66,10 +85,9 @@ def test_parallelism_invariance(spark, docs, tmp_path):
     assert s1.seen_set() == s2.seen_set()
 
 
-def test_kill_resume_bit_identical(spark, docs, tmp_path):
-    full = run_crawl(spark, docs, tmp_path / "full", rounds=ROUNDS)
+def test_kill_resume_bit_identical(spark, docs, full, part2, tmp_path):
     # "killed" run: stop after round 2, then resume with a FRESH scheduler
-    partial = run_crawl(spark, docs, tmp_path / "part", rounds=2)
+    part2[1](tmp_path / "part")
     resumed = CrawlScheduler(spark, docs, str(tmp_path / "part"), make_cfg())
     resumed.run(ROUNDS)  # picks up from committed round 2; no seeds needed
     assert resumed.crawl_order() == full.crawl_order()
@@ -81,20 +99,20 @@ def test_kill_resume_bit_identical(spark, docs, tmp_path):
         assert c_full == c_res
 
 
-def test_resume_ignores_partial_uncommitted_round(spark, docs, tmp_path):
+def test_resume_ignores_partial_uncommitted_round(
+    spark, docs, full, part2, tmp_path
+):
     """A crash mid-commit leaves a _tmp_round=K dir with partial data and
     NO _COMMITTED.json; resume must ignore it entirely and re-execute the
     round bit-identically (the atomic-rename publish contract)."""
     import os
 
-    full = run_crawl(spark, docs, tmp_path / "pfull", rounds=ROUNDS)
-    part = run_crawl(spark, docs, tmp_path / "ppart", rounds=2)
+    part2[1](tmp_path / "ppart")
     # simulate a crash during round 3's commit: partial junk, no marker
     tmp3 = os.path.join(str(tmp_path / "ppart"), "_tmp_round=3")
     os.makedirs(os.path.join(tmp3, "crawl_log"))
     with open(os.path.join(tmp3, "crawl_log", "part-junk.parquet"), "wb") as f:
         f.write(b"\x00not a parquet file")
-    _ = part
     resumed = CrawlScheduler(spark, docs, str(tmp_path / "ppart"), make_cfg())
     assert resumed.store.latest_round() == 2  # junk dir not visible
     resumed.run(ROUNDS)
@@ -103,9 +121,9 @@ def test_resume_ignores_partial_uncommitted_round(spark, docs, tmp_path):
     assert not os.path.exists(tmp3)  # overwritten by the real commit
 
 
-def test_span_sequence_equality(spark, docs, tmp_path):
+def test_span_sequence_equality(docs, full):
     """Every re-emitted document preserves (kind, text, media_ref, order)."""
-    sched = run_crawl(spark, docs, tmp_path / "spans")
+    sched = full
     emitted = sched.re_emitted_documents(1)
     orig = docs.withColumnRenamed("spans", "orig_spans")
     cmp = emitted.join(orig, "doc_id")
@@ -114,8 +132,8 @@ def test_span_sequence_equality(spark, docs, tmp_path):
     assert cmp.count() > 0
 
 
-def test_politeness_budget_enforced(spark, docs, tmp_path):
-    sched = run_crawl(spark, docs, tmp_path / "polite")
+def test_politeness_budget_enforced(spark, full):
+    sched = full
     cfg = make_cfg()
     last = sched.store.latest_round()
     seen_host_rounds = {}
@@ -157,8 +175,8 @@ def test_fetch_miss_404_analogue(spark, docs, tmp_path):
     assert pend.filter(F.col("url").isin(dead_urls)).count() == 0
 
 
-def test_frontier_metrics(spark, docs, tmp_path):
-    sched = run_crawl(spark, docs, tmp_path / "metrics")
+def test_frontier_metrics(full):
+    sched = full
     m = {r["host"]: r for r in sched.frontier_metrics().collect()}
     assert len(m) > 3
     total_seen = sum(r["seen_exact"] for r in m.values())
@@ -168,8 +186,8 @@ def test_frontier_metrics(spark, docs, tmp_path):
             assert abs(r["seen_approx"] - r["seen_exact"]) / r["seen_exact"] < 0.1
 
 
-def test_url_seen_is_exact_and_grows(spark, docs, tmp_path):
-    sched = run_crawl(spark, docs, tmp_path / "seen")
+def test_url_seen_is_exact_and_grows(full):
+    sched = full
     last = sched.store.latest_round()
     seen = sched._read_url_seen(last)
     # exact: no duplicate canonical URLs ever enter the seen set
