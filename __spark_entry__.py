@@ -35,19 +35,25 @@ from cord19_crawler_spark.functions.hashes import (  # noqa: E402
 )
 
 _PKG_ZIP = None
+# (applicationId, zip) of the last addPyFile: one add per SparkContext
+_SHIPPED = None
 
 
 def _ensure_workers(spark: SparkSession) -> None:
     """Ship the package to executor Python workers (addPyFile), so pandas
     UDFs defined in the package deserialize there. Equivalent of
-    ``spark-submit --py-files`` for a driver that didn't pass it. A caller
-    may preset ``_PKG_ZIP`` to ship a zip it built elsewhere."""
-    global _PKG_ZIP
+    ``spark-submit --py-files`` for a driver that didn't pass it; ships
+    once per SparkContext. A caller may preset ``_PKG_ZIP`` to ship a zip
+    it built elsewhere."""
+    global _PKG_ZIP, _SHIPPED
     if _PKG_ZIP is None:
         _PKG_ZIP = write_package_zip(
             os.path.join("/tmp", "cord19_crawler_spark_pkg.zip")
         )
-    spark.sparkContext.addPyFile(_PKG_ZIP)
+    shipped = (spark.sparkContext.applicationId, _PKG_ZIP)
+    if _SHIPPED != shipped:
+        spark.sparkContext.addPyFile(_PKG_ZIP)
+        _SHIPPED = shipped
 
 
 # Input-skew guard (optimization guide §2.5 "input skew"): the sf* test
@@ -2095,7 +2101,7 @@ _CANON_URL_SQL_EXPR = """
 def frontier_canonicalize(spark, sf_dir):
     """P1 analogue (THE canonicalization kernel): messy URL variants →
     canonical form via the pure-Catalyst canonicalizer (codegen'd, no
-    Python boundary — equality with the pandas kernel on this grammar is
+    Python boundary — equality with canonicalize_one on this grammar is
     test-pinned); oracle constructs the canonical string directly."""
     from cord19_crawler_spark.functions.urls import canonicalize_url_sql
 

@@ -235,38 +235,3 @@ def global_batch(ranked: DataFrame, batch_size: int) -> DataFrame:
         F.desc("priority"), F.asc("url")
     )
     return batch.withColumn("seq", F.row_number().over(w))
-
-
-def advance_host_state(
-    host_state: DataFrame,
-    scheduled: DataFrame,
-    current_round: int,
-    now: float | None = None,
-) -> DataFrame:
-    """Set last_scheduled_round = r (and, when ``now`` is given,
-    last_fetch_ts = now) for hosts that got work this round.
-
-    In-memory/whole-table form of the update; the scheduler persists
-    APPEND-ONLY deltas instead (scheduler._host_state_delta — only touched
-    and newly-discovered hosts are written, the effective table is the
-    latest row per host), because a full O(hosts) rewrite per round is a
-    ~6 GB write at the 10^8-host design point."""
-    touched = scheduled.select("host").distinct().withColumn("_touched", F.lit(1))
-    out = (
-        _with_wallclock_cols(host_state)
-        .join(touched, "host", "left")
-        .withColumn(
-            "last_scheduled_round",
-            F.when(F.col("_touched") == 1, F.lit(current_round)).otherwise(
-                F.col("last_scheduled_round")
-            ),
-        )
-    )
-    if now is not None:
-        out = out.withColumn(
-            "last_fetch_ts",
-            F.when(F.col("_touched") == 1, F.lit(float(now))).otherwise(
-                F.col("last_fetch_ts")
-            ),
-        )
-    return out.drop("_touched")

@@ -1,21 +1,18 @@
-"""Hot-host skew handling: explicit split plan + salted repartitioning.
+"""Hot-host skew handling: the explicit split plan.
 
 Reference analogue: frequency-ranked round-robin of the top-5000 hot words
 plus greedy least-loaded tail placement across 10 barrels
 (/root/reference/src/barrel.py:87-122) — deliberate placement balancing that
 a hash partitioner alone doesn't give you. The frontier version:
 
-1. ``hot_host_plan`` — one aggregation over pending counts yields
-   ``n_salt(host) = ceil(count / threshold)`` for hosts above threshold.
-   This plan is tiny (≤ #hosts rows) and broadcastable.
-2. ``salted`` — composite shuffle key ``(host, salt)`` where
-   ``salt = pmod(xxhash64(url), n_salt)``: a host with 10^8 pending URLs is
-   spread over ``n_salt`` reducers instead of melting one executor.
-
-Politeness windows stay on the raw host key (politeness.py) — salting is
-only applied to the *heavy* shuffles (dedup, URL aggregation, frontier
-merge), where per-host semantics don't apply. AQE skew-join splitting is ON
-as a backstop (session.py); this plan handles the aggregation-side skew AQE
+``hot_host_plan`` — one aggregation over pending counts yields
+``n_salt(host) = ceil(count / threshold)`` for hosts above threshold. This
+plan is tiny (≤ #hosts rows) and broadcastable. The scheduler hands it to
+``politeness.per_host_topk`` as ``split_plan``: a PRE-phase window over
+``(host, salt)`` spreads a host with 10^8 pending URLs over ``n_salt``
+reducers instead of melting one executor, and the exact per-host window
+after it keeps the budget a per-host semantic. AQE skew-join splitting is
+ON as a backstop (session.py); this plan handles the window-side skew AQE
 does not.
 """
 
@@ -39,29 +36,3 @@ def hot_host_plan(pending: DataFrame, threshold: int = 100_000) -> DataFrame:
         )
         .select("host", "n_salt")
     )
-
-
-def salted(df: DataFrame, plan: DataFrame, url_col: str = "url") -> DataFrame:
-    """Attach the salt column from the broadcast split plan.
-
-    Downstream heavy ops repartition on (host, salt) — e.g.
-    ``df.repartition(F.col("host"), F.col("salt"))`` — so hot hosts fan out.
-    """
-    return (
-        df.join(F.broadcast(plan), "host", "left")
-        .withColumn(
-            "salt",
-            F.pmod(
-                F.xxhash64(F.col(url_col)), F.coalesce(F.col("n_salt"), F.lit(1))
-            ).cast("int"),
-        )
-        .drop("n_salt")
-    )
-
-
-def repartition_salted(df: DataFrame, plan: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Repartition by the salted composite key (hot hosts split)."""
-    s = salted(df, plan)
-    cols = [F.col("host"), F.col("salt")]
-    out = s.repartition(num_partitions, *cols) if num_partitions else s.repartition(*cols)
-    return out.drop("salt")

@@ -1,4 +1,4 @@
-"""URL extraction + canonicalization kernels (vectorized, Arrow-batched).
+"""URL extraction + canonicalization kernels.
 
 Frontier analogue of the reference's text-canonicalization kernel
 (``/root/reference/src/crawler.py:13-15,51-57`` — lowercase, collapse space,
@@ -10,9 +10,13 @@ strip punct class): here the canonical form of a URL is
   * query params sorted by (key, value), duplicates kept
   * empty path normalized to "/"
 
-All kernels are pandas UDFs (Arrow batch transfer) — no per-row Python UDFs
-anywhere in the hot path, per the input_hint constraint. At 100 TB these run
-inside whole-stage-pipelined Python workers over ~10k-row Arrow batches.
+``canonicalize_one`` is the one Python implementation of this grammar.
+The pandas UDFs ``canonicalize_url`` and ``extract_canonical_urls`` map it
+over Arrow batches (~10k rows per Python exchange — the batch amortizes
+the boundary, so no per-row Python UDF sits in the hot path).
+``canonicalize_url_sql`` is the pure-Catalyst form for the simple grammar
+(no userinfo, no percent-encoding); it agrees with ``canonicalize_one``
+there, ports and trailing host dots included (tests/test_urls.py).
 """
 
 from __future__ import annotations
@@ -65,127 +69,27 @@ def canonicalize_one(url: str) -> str | None:
     return urlunsplit((scheme, netloc, path, query, ""))
 
 
-# Fast-path grammar: scheme://host[:port]/path[?query] with NO userinfo or
-# percent-weirdness (fragment allowed — it's dropped). Everything else takes
-# the exact per-row kernel. Batch-equality with canonicalize_one is pinned by
-# tests/test_urls.py (example + property tests).
-_SIMPLE_URL_RE = re.compile(
-    r"(?i)^(https?)://([A-Za-z0-9.\-]+)(?::(\d{1,5}))?(/[^?#]*)?"
-    r"(?:\?([^#]*))?(?:#.*)?$"
-)
-
-# A query whose every param is `safe-key=safe-value` round-trips IDENTICALLY
-# through parse_qsl + urlencode (no +, %, ;, stray =, or missing '=', which
-# would re-encode differently) — such queries only need a (key, value) sort.
-_SAFE_QUERY_RE = re.compile(
-    r"^[A-Za-z0-9_.\-~]+=[A-Za-z0-9_.\-~]*"
-    r"(?:&[A-Za-z0-9_.\-~]+=[A-Za-z0-9_.\-~]*)*$"
-)
-
-
-def _sort_safe_query(q: str) -> str:
-    # sort by (key, value) TUPLES — lexicographic sort of the raw "k=v"
-    # strings would order "a2=b" before "a=b" ('2' < '='), diverging from
-    # urlencode(sorted(parse_qsl(...)))
-    return "&".join(
-        "=".join(kv) for kv in sorted(p.split("=", 1) for p in q.split("&"))
-    )
-
-
-def _canonicalize_series(urls: pd.Series) -> pd.Series:
-    """Batch canonicalization: vectorized pandas .str ops for the dominant
-    simple-URL case (crawl links are overwhelmingly query-less), per-row
-    ``canonicalize_one`` for the rest. Same results as mapping
-    canonicalize_one over every row (incl. default-port stripping and
-    leading-zero port normalization)."""
-    s = urls.astype("object")
-    # urlsplit (WHATWG) strips tab/CR/LF ANYWHERE in the URL — mirror that
-    # before matching so the fast path stays byte-identical to the per-row
-    # kernel for seeds/sitemap locs containing embedded control characters
-    stripped = s.str.strip().str.replace(r"[\t\r\n]", "", regex=True)
-    ex = stripped.str.extract(_SIMPLE_URL_RE)
-    scheme = ex[0].str.lower()
-    host = ex[1].str.lower().str.rstrip(".")
-    port_num = pd.to_numeric(ex[2], errors="coerce")
-    has_port = port_num.notna()
-    is_default = ((scheme == "http") & (port_num == 80)) | (
-        (scheme == "https") & (port_num == 443)
-    )
-    port_ok = ~has_port | (port_num <= 65535)
-    # query handling: absent/empty queries drop; "safe" queries (plain
-    # k=v&k=v grammar — the overwhelming crawl case) need only a (key,
-    # value) param sort, done on single-param rows with zero work and on
-    # multi-param rows with a cheap split-sort (no urlsplit); anything
-    # percent-encoded or structurally odd falls to the exact kernel
-    qs = ex[4]
-    has_q = qs.notna() & qs.ne("")
-    q_safe = ~has_q
-    if has_q.any():
-        q_safe = q_safe | qs.fillna("").str.match(_SAFE_QUERY_RE)
-    simple = ex[0].notna() & host.notna() & host.ne("") & port_ok & q_safe
-    # rebuild the port from its NUMERIC value (urlsplit semantics: '0443'
-    # parses to 443 and default-strips)
-    netloc = host.where(
-        ~(has_port & ~is_default),
-        host.str.cat(
-            port_num.fillna(0).astype("int64").astype(str), sep=":"
-        ),
-    )
-    path = ex[3].where(ex[3].notna() & ex[3].ne(""), "/")
-    fast = scheme.str.cat(netloc, sep="://").str.cat(path)
-    if has_q.any():
-        multi = has_q & q_safe & qs.str.contains("&", regex=False)
-        canon_q = qs.where(~multi)
-        if multi.any():
-            canon_q = canon_q.astype("object")
-            canon_q.loc[multi] = qs[multi].map(_sort_safe_query)
-        fast = fast.where(
-            ~(has_q & q_safe), fast.str.cat(canon_q.fillna(""), sep="?")
-        )
-    result = fast.where(simple)
-    hard = ~simple
-    if hard.any():
-        result = result.astype("object")
-        result.loc[hard] = s[hard].map(
-            lambda u: canonicalize_one(u) if isinstance(u, str) else None
-        )
-    return result.where(result.notna(), None)
-
-
 @pandas_udf(T.StringType())
 def canonicalize_url(urls: pd.Series) -> pd.Series:
-    """Vectorized URL canonicalization (Arrow-batched)."""
-    return _canonicalize_series(urls)
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def extract_urls(texts: pd.Series) -> pd.Series:
-    """Extract raw http(s) URLs from free text (span text), order-preserving."""
-    return texts.map(
-        lambda t: [m.rstrip(_TRAIL_PUNCT) for m in URL_RE.findall(t)] if t else []
-    )
+    """URL canonicalization over an Arrow batch: ``canonicalize_one`` per
+    row (the batch already amortizes the Python boundary)."""
+    return urls.map(canonicalize_one)
 
 
 @pandas_udf(T.ArrayType(T.StringType()))
 def extract_canonical_urls(texts: pd.Series) -> pd.Series:
     """Fused extract+canonicalize in ONE Arrow stage (one Python exchange per
-    round instead of two — the hot-path kernel the scheduler uses). The
-    regex extraction is per-row (variable-length hit lists); the
-    canonicalization of the flattened hits is batch-vectorized."""
-    idx: list[int] = []
-    flat: list[str] = []
-    for i, t in enumerate(texts):
-        if t:
-            for m in URL_RE.findall(t):
-                idx.append(i)
-                flat.append(m.rstrip(_TRAIL_PUNCT))
-    groups: list[list[str]] = [[] for _ in range(len(texts))]
-    if flat:
-        canon = _canonicalize_series(pd.Series(flat, dtype="object"))
-        for i, c in zip(idx, canon):
-            if c is not None:
-                groups[i].append(c)
-    return pd.Series(groups)
+    round instead of two — the hot-path kernel the scheduler uses): http(s)
+    URLs found in each text, trailing sentence punctuation stripped, then
+    canonicalized in order; hits that do not canonicalize are dropped."""
+
+    def _links(text: str | None) -> list[str]:
+        if not text:
+            return []
+        hits = (m.rstrip(_TRAIL_PUNCT) for m in URL_RE.findall(text))
+        return [c for c in map(canonicalize_one, hits) if c is not None]
+
+    return texts.map(_links)
 
 
 def host_from_canonical(col: Column) -> Column:
@@ -215,21 +119,6 @@ def path_expr(col: Column) -> Column:
     return F.regexp_extract(col, PATH_RE, 1)
 
 
-@pandas_udf(T.StringType())
-def url_host(urls: pd.Series) -> pd.Series:
-    """Host component of an (already canonical) URL."""
-
-    def _host(u: str | None) -> str | None:
-        if not u:
-            return None
-        try:
-            return urlsplit(u).hostname
-        except ValueError:
-            return None
-
-    return urls.map(_host)
-
-
 def url_id(col: Column | str) -> Column:
     """Stable 64-bit id for a canonical URL (frontier analogue of the
     reference's dense int doc-id mapping, src/barreled_index.py:139-156).
@@ -243,10 +132,11 @@ def canonicalize_url_sql(col: Column) -> Column:
     """A pure-Catalyst (JVM, codegen'd) canonicalizer for the common case:
     lowercase scheme+host, strip fragment, strip default/normalize numeric
     ports, sort query params. Used when the URL grammar is known to be
-    simple (no userinfo, no encoded chars, no trailing host dots) — the
-    pandas UDF is the general-purpose kernel, this is the fast path that
-    stays inside WholeStageCodegen.  Batch equality with the Python
-    kernel on this grammar (including ports) is pinned by
+    simple (no userinfo, no encoded chars) — ``canonicalize_one`` is the
+    general-purpose kernel, this is the fast path that stays inside
+    WholeStageCodegen.  NULL where ``canonicalize_one`` gives None for a
+    port above 65535.  Equality with ``canonicalize_one`` on this grammar
+    (ports and trailing host dots included) is pinned by
     tests/test_urls.py.
     """
     no_frag = F.regexp_replace(col, r"#.*$", "")
@@ -255,8 +145,8 @@ def canonicalize_url_sql(col: Column) -> Column:
     scheme = F.lower(F.regexp_extract(base, r"(?i)^(https?)://", 1))
     hostpath = F.regexp_extract(base, r"(?i)^https?://([^/]*)(/.*)?$", 1)
     path = F.regexp_extract(base, r"(?i)^https?://[^/]*(/.*)?$", 1)
-    # sort params by (key, value) TUPLES, matching the pandas kernel's
-    # _sort_safe_query — array_sort over the raw "k=v" strings would order
+    # sort params by (key, value) TUPLES, as canonicalize_one's
+    # sorted(parse_qsl(...)) does — array_sort over the raw "k=v" strings would order
     # "page2=x" before "page=y" ('2' < '='), giving the same URL two
     # different canonical forms depending on which canonicalizer ran.
     # A param with no '=' re-emits as "k=" (parse_qsl keep_blank_values
@@ -281,27 +171,37 @@ def canonicalize_url_sql(col: Column) -> Column:
     )
     # port: parse numerically ('0443' == 443, urlsplit semantics), strip
     # the scheme default, keep others re-emitted from the numeric value;
-    # a non-numeric ':...' tail falls through unchanged (out of grammar)
+    # a port above 65535 makes the whole URL NULL (urlsplit raises); a
+    # non-numeric ':...' tail falls through unchanged (out of grammar).
+    # Trailing host dots go, as in canonicalize_one ('a.com.' == 'a.com').
     authority = F.lower(hostpath)
-    host_only = F.substring_index(authority, ":", 1)
-    port_str = F.regexp_extract(authority, r"^[^:]*:(\d{1,5})$", 1)
-    port_num = F.when(port_str != "", port_str.cast("long"))
+    host_only = F.regexp_replace(
+        F.substring_index(authority, ":", 1), r"\.+$", ""
+    )
+    port_str = F.regexp_extract(authority, r"^[^:]*:0*(\d+)$", 1)
+    port_num = F.when(
+        (port_str != "") & (F.length(port_str) <= 5), port_str.cast("long")
+    )
+    port_out_of_range = (F.length(port_str) > 5) | (port_num > 65535)
     is_default = ((scheme == "http") & (port_num == 80)) | (
         (scheme == "https") & (port_num == 443)
     )
     netloc = (
-        F.when(port_num.isNull(), authority)
+        F.when(~authority.contains(":"), host_only)
+        .when(port_num.isNull(), authority)
         .when(is_default, host_only)
         .otherwise(F.concat(host_only, F.lit(":"), port_num.cast("string")))
     )
-    return F.concat(
-        scheme,
-        F.lit("://"),
-        netloc,
-        F.when(path == "", F.lit("/")).otherwise(path),
-        F.when(F.size(params) == 0, F.lit("")).otherwise(
-            F.concat(F.lit("?"), sorted_q)
-        ),
+    return F.when(port_out_of_range, F.lit(None).cast("string")).otherwise(
+        F.concat(
+            scheme,
+            F.lit("://"),
+            netloc,
+            F.when(path == "", F.lit("/")).otherwise(path),
+            F.when(F.size(params) == 0, F.lit("")).otherwise(
+                F.concat(F.lit("?"), sorted_q)
+            ),
+        )
     )
 
 
@@ -316,7 +216,7 @@ def surt_key(col: Column) -> Column:
     index (range scans / partition pruning on the SURT prefix at scale).
 
     Input is expected CANONICAL (the output of ``canonicalize_url`` /
-    ``canonical_url_expr``: lowercased host, no fragment, sorted query);
+    ``canonicalize_url_sql``: lowercased host, no fragment, sorted query);
     this expression only reorders. Leading ``www.`` is dropped per SURT
     convention. Ports are handled scheme-aware: the scheme's DEFAULT
     port (http:80 / https:443) is stripped, any other port survives in

@@ -111,12 +111,6 @@ def barrel_stats(assigned: DataFrame) -> DataFrame:
     )
 
 
-def word_to_barrel(assigned: DataFrame) -> DataFrame:
-    """J5 routing table — becomes partition pruning when postings are
-    written partitioned by barrel_id."""
-    return assigned.select("word", "barrel_id")
-
-
 def doc_to_barrels(assigned: DataFrame, postings: DataFrame) -> DataFrame:
     """A7: doc → sorted set of barrels containing its words. The reference
     does this in an O(words×docs×barrels) loop (src/barrel.py:131-143);

@@ -229,23 +229,6 @@ def resize_images(
     return media.mapInPandas(_run, schema=out_schema)
 
 
-def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling plumbing: one output row per sampled frame
-    timestamp (payload decode stubbed — timestamps derive from meta)."""
-    frames = media.filter(F.col("kind") == "video").select(
-        "doc_id",
-        "media_ref",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.coalesce(F.col("meta.duration_ms"), F.lit(0)),
-                F.lit(every_ms),
-            )
-        ).alias("frame_ms"),
-    )
-    return frames
-
-
 # ---- header-only metadata sniffing (no decode library, bytes-cheap) --------
 
 _SNIFF_TYPE = T.StructType(

@@ -216,38 +216,6 @@ def ivf_probe_stored(
     )
 
 
-def pairwise_cosine_topk_per_label(
-    emb: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """Per-label all-pairs cosine top-k (co-partitioned self-join on label —
-    the grouped variant of brute force used for intra-class mining)."""
-    from pyspark.sql import Window
-
-    b = emb.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v"), F.col(label_col).alias("lbl")
-    )
-    l, r = b.alias("l"), b.alias("r")
-    pairs = (
-        l.join(r, "lbl")
-        .filter(F.col("l.vid") < F.col("r.vid"))
-        .select(
-            "lbl",
-            F.col("l.vid").alias("vec_a"),
-            F.col("r.vid").alias("vec_b"),
-            F.round(
-                _dot(F.col("l.v"), F.col("r.v")) / (_norm(F.col("l.v")) * _norm(F.col("r.v"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("lbl").orderBy(F.desc("cosine"), F.asc("vec_a"), F.asc("vec_b"))
-    return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def random_project(
     emb: DataFrame,
     out_dims: int = 16,

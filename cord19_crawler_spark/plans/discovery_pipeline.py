@@ -12,8 +12,9 @@ this module is the composition (the frontier analogue of
    fragments/non-http dropped.  Scan-side projection.
 2. **Canonicalization** (``functions/urls.py:canonicalize_url_sql``) —
    lowercase scheme+host, strip fragment, sort query params; the pure
-   Catalyst fast path (the pandas-UDF kernel is the general one).
-   Scan-side.
+   Catalyst form of ``canonicalize_one``.  Scan-side.  A link with no
+   canonical form (a port above 65535) is NULL and never becomes a
+   candidate.
 3. **Within-batch dedup + discovery evidence** — ONE linear hash
    aggregate on the canonical URL: ``n_refs`` (total link occurrences)
    and ``n_src_pages`` (distinct linking pages — breadth beats volume;
@@ -106,8 +107,12 @@ def discovery_pipeline(
     w = Window.partitionBy("host").orderBy(
         F.desc("n_src_pages"), F.desc("n_refs"), F.asc("url")
     )
+    # the NULL-url drop sits after the window: its NULL host is a window
+    # partition of its own, and a filter on the canonical url any lower
+    # would be pushed into the scan-side projection and evaluate the
+    # whole canonicalization a second time
     return (
         cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= per_host_k)
+        .filter((F.col("rank") <= per_host_k) & F.col("url").isNotNull())
         .select("host", "url", "n_refs", "n_src_pages", "rank")
     )

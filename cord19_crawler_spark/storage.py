@@ -28,6 +28,38 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+# a compaction snapshot carrying all of these is CUMULATIVE: every round
+# at or below it can be read from the snapshot alone
+_CUMULATIVE_TABLES = ("crawl_log", "frontier_all", "filter_state")
+
+
+def expiry_limit(store, upto: int | None = None) -> int:
+    """The highest round ``expire_rounds`` may reclaim (rounds 1..limit;
+    < 1 means none) — the one expiry rule of both checkpoint stores, over
+    their ``latest_round`` / ``latest_compact(upto=)`` /
+    ``has_compact_table``.
+
+    Never expired: round 0 (its _COMMITTED.json carries the filter-config
+    facets every resume validates) and the latest round. Never past the
+    newest CUMULATIVE compaction snapshot (one carrying crawl_log,
+    frontier_all and filter_state, since filter deltas below it become
+    unreadable: effective state = latest-row-per-partition over the
+    append-only deltas); without one, history reads would lose rows, so
+    this raises ``ValueError``.
+    """
+    compact = store.latest_compact()
+    while compact is not None and not all(
+        store.has_compact_table(compact, t) for t in _CUMULATIVE_TABLES
+    ):
+        compact = store.latest_compact(upto=compact - 1)
+    if compact is None:
+        raise ValueError("no cumulative compaction snapshot: run compact() first")
+    return min(
+        compact,
+        (store.latest_round() or 0) - 1,
+        upto if upto is not None else compact,
+    )
+
 
 class CheckpointStore:
     def __init__(self, root: str):
@@ -157,37 +189,10 @@ class CheckpointStore:
         return os.path.isdir(self.compact_table_path(rnd, name))
 
     def expire_rounds(self, upto: int | None = None) -> list[int]:
-        """Reclaim round delta dirs made redundant by a CUMULATIVE
-        compaction snapshot (one carrying crawl_log + frontier_all).
-
-        Never expired: round 0 (its _COMMITTED.json carries the
-        filter-config facets every resume validates) and the latest round.
-        Refuses to expire past the newest cumulative snapshot — one that
-        also carries filter_state, since filter deltas below it become
-        unreadable (effective state = latest-row-per-partition over the
-        append-only deltas). Without such a snapshot, history reads would
-        lose rows. This is the parquet analogue of Iceberg snapshot
-        expiration.
-        """
-        latest = self.latest_round()
-        compact = self.latest_compact()
-        while compact is not None and not (
-            self.has_compact_table(compact, "crawl_log")
-            and self.has_compact_table(compact, "frontier_all")
-            and self.has_compact_table(compact, "filter_state")
-        ):
-            compact = self.latest_compact(upto=compact - 1)
-        if compact is None:
-            raise ValueError(
-                "no cumulative compaction snapshot: run compact() first"
-            )
-        limit = min(
-            compact,
-            (latest or 0) - 1,
-            upto if upto is not None else compact,
-        )
+        """Reclaim the round delta dirs :func:`expiry_limit` allows — the
+        parquet analogue of Iceberg snapshot expiration."""
         removed: list[int] = []
-        for k in range(1, limit + 1):
+        for k in range(1, expiry_limit(self, upto) + 1):
             d = self._round_dir(k)
             if os.path.isdir(d):
                 shutil.rmtree(d)

@@ -48,6 +48,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .storage import expiry_limit
+
 ROUND_COL = "_round"
 _IDENT_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*$")
 
@@ -337,29 +339,10 @@ class IcebergCheckpointStore:
         """Iceberg analogue of the parquet store's round expiry: DELETE the
         expired round partitions from every state table (row-level deletes
         over the partition column — metadata-only in Iceberg), then reclaim
-        files via expire_snapshots. Same guardrails: round 0 and the latest
-        round are kept; only rounds covered by a cumulative snapshot go."""
-        latest = self.latest_round()
-        compact = self.latest_compact()
-        while compact is not None and not (
-            self.has_compact_table(compact, "crawl_log")
-            and self.has_compact_table(compact, "frontier_all")
-            and self.has_compact_table(compact, "filter_state")
-        ):
-            rows = self.spark.sql(
-                f"SELECT max(round) AS r FROM {self.ns}.compacts "
-                f"WHERE round < {int(compact)}"
-            ).collect()
-            compact = None if rows[0]["r"] is None else int(rows[0]["r"])
-        if compact is None:
-            raise ValueError(
-                "no cumulative compaction snapshot: run compact() first"
-            )
-        limit = min(
-            compact,
-            (latest or 0) - 1,
-            upto if upto is not None else compact,
-        )
+        files via expire_snapshots. Same rule (:func:`expiry_limit`): round
+        0 and the latest round are kept; only rounds covered by a
+        cumulative snapshot go."""
+        limit = expiry_limit(self, upto)
         if limit < 1:
             return []
         # report only rounds that actually existed (had a commit marker) —

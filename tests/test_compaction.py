@@ -7,6 +7,7 @@ import pytest
 
 from cord19_crawler_spark.datagen import generate_documents, seed_urls
 from cord19_crawler_spark.frontier import CrawlScheduler, SchedulerConfig
+from cord19_crawler_spark.storage import expiry_limit
 
 
 def _cfg():
@@ -140,6 +141,46 @@ def test_expire_refuses_without_cumulative_snapshot(spark, tmp_path):
         s.expire()
     # legacy snapshot still serves reads via delta-union fallback
     assert len(s.crawl_order()) > 0
+
+
+class _FakeStore:
+    """Rounds 0..latest committed; ``compacts`` maps a snapshot round to
+    the tables it carries."""
+
+    def __init__(self, latest, compacts):
+        self.latest, self.compacts = latest, compacts
+
+    def latest_round(self):
+        return self.latest
+
+    def latest_compact(self, upto=None):
+        rounds = [r for r in self.compacts if upto is None or r <= upto]
+        return max(rounds, default=None)
+
+    def has_compact_table(self, rnd, name):
+        return name in self.compacts[rnd]
+
+
+_CUMULATIVE = {"crawl_log", "frontier_all", "filter_state", "url_seen"}
+
+
+def test_expiry_limit_needs_a_cumulative_snapshot():
+    with pytest.raises(ValueError, match="cumulative"):
+        expiry_limit(_FakeStore(5, {}))
+    with pytest.raises(ValueError, match="cumulative"):
+        expiry_limit(_FakeStore(5, {3: {"url_seen", "crawl_log"}}))
+
+
+def test_expiry_limit_steps_back_past_a_non_cumulative_snapshot():
+    store = _FakeStore(9, {3: _CUMULATIVE, 6: {"url_seen"}})
+    assert expiry_limit(store) == 3
+
+
+def test_expiry_limit_respects_upto_and_keeps_the_latest_round():
+    store = _FakeStore(6, {6: _CUMULATIVE})
+    assert expiry_limit(store) == 5
+    assert expiry_limit(store, upto=2) == 2
+    assert expiry_limit(_FakeStore(1, {1: _CUMULATIVE})) == 0
 
 
 def test_expire_on_compact_auto(spark, tmp_path):

@@ -85,6 +85,23 @@ def test_per_host_cap(spark):
     assert got["https://h0.example.com/doc/2"]["rank"] == 1
 
 
+def test_links_without_canonical_form_never_become_candidates(spark):
+    pages = spark.createDataFrame(
+        [("https://h0.example.com/page/1",
+          '<a href="http://a.com:70000/x">a</a><a href="/doc/1">b</a>')],
+        "url string, html string",
+    )
+    robots = spark.createDataFrame(
+        [Row(host="h0.example.com",
+             rules=[Row(allow=False, path_prefix="/private")])]
+    )
+    for rules in (None, robots):
+        got = discovery_pipeline(pages, robots=rules).collect()
+        assert [(r["host"], r["url"]) for r in got] == [
+            ("h0.example.com", "https://h0.example.com/doc/1")
+        ]
+
+
 def test_candidate_path_exchange_budget(spark):
     """Without seen/robots the wide ops are exactly the url aggregate
     (two-phase for countDistinct) and the host window — no duplicated

@@ -1,6 +1,7 @@
 """Driver-side helpers: the package zipper behind ``python -m
 cord19_crawler_spark package`` and ``__spark_entry__._ensure_workers``,
-and the bounded parquet footer walk behind the input-spread guard."""
+the once-per-SparkContext package shipping, and the bounded parquet
+footer walk behind the input-spread guard."""
 
 import os
 import subprocess
@@ -59,3 +60,31 @@ def test_scan_units_stops_the_whole_walk_at_the_cap(tmp_path, monkeypatch):
     monkeypatch.setattr(pq, "ParquetFile", _Footer)
     assert entry._scan_units(str(tmp_path)) == entry._SCAN_UNITS_CAP
     assert len(reads) == 1, reads
+
+
+def test_ensure_workers_ships_once_per_spark_context(monkeypatch):
+    import __spark_entry__ as entry
+
+    added = []
+
+    class _Context:
+        def __init__(self, app_id):
+            self.applicationId = app_id
+
+        def addPyFile(self, path):
+            added.append((self.applicationId, path))
+
+    class _Session:
+        def __init__(self, app_id):
+            self.sparkContext = _Context(app_id)
+
+    monkeypatch.setattr(entry, "_PKG_ZIP", "/preset/pkg.zip")
+    monkeypatch.setattr(entry, "_SHIPPED", None)
+    first = _Session("local-1")
+    entry._ensure_workers(first)
+    entry._ensure_workers(first)
+    assert added == [("local-1", "/preset/pkg.zip")]
+    entry._ensure_workers(_Session("local-2"))
+    assert added == [
+        ("local-1", "/preset/pkg.zip"), ("local-2", "/preset/pkg.zip")
+    ]

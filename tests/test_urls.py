@@ -6,8 +6,8 @@ from pyspark.sql import functions as F
 from cord19_crawler_spark.functions.urls import (
     canonicalize_one,
     canonicalize_url,
-    extract_urls,
-    url_host,
+    extract_canonical_urls,
+    host_from_canonical,
 )
 
 CASES = [
@@ -58,21 +58,22 @@ def test_extract_urls_order_and_trailing_punct(spark):
         [("see http://a.com/x. then https://B.com/y?q=1, end", ), (None,), ("no links",)],
         "text string",
     )
-    rows = df.select(extract_urls("text").alias("u")).collect()
-    assert rows[0]["u"] == ["http://a.com/x", "https://B.com/y?q=1"]
+    rows = df.select(extract_canonical_urls("text").alias("u")).collect()
+    assert rows[0]["u"] == ["http://a.com/x", "https://b.com/y?q=1"]
     assert rows[1]["u"] == []
     assert rows[2]["u"] == []
 
 
 def test_url_host(spark):
     df = spark.createDataFrame([("https://host3.example.com/doc/1",)], "url string")
-    assert df.select(url_host("url").alias("h")).first()["h"] == "host3.example.com"
+    h = df.select(host_from_canonical(F.col("url")).alias("h")).first()["h"]
+    assert h == "host3.example.com"
 
 
 def test_catalyst_fast_path_matches_python_kernel(spark):
     """canonicalize_url_sql (pure Catalyst, codegen'd) must agree with the
-    general pandas kernel on the simple URL grammar it supports (numeric
-    ports allowed; no percent-encoding, no trailing host dots)."""
+    general Python kernel on the simple URL grammar it supports (numeric
+    ports and trailing host dots allowed; no percent-encoding)."""
     from pyspark.sql import functions as F
 
     from cord19_crawler_spark.functions.urls import canonicalize_url_sql
@@ -101,6 +102,11 @@ def test_catalyst_fast_path_matches_python_kernel(spark):
         "http://a.com/p?a=1&&b=2",
         "http://a.com/p?a=1&",
         "http://a.com/p?&",
+        # out-of-range port: both give NULL (urlsplit raises)
+        "http://a.com:70000/x",
+        # trailing host dots strip, also before a port
+        "http://a.com./x",
+        "http://a.com..:8080/x",
     ]
     df = spark.createDataFrame([(u,) for u in simple], "url string")
     both = df.select(
@@ -142,15 +148,10 @@ def test_url_id_stable(spark):
 
 
 def test_vectorized_canonicalize_series_matches_per_row():
-    """The pandas fast path must agree with canonicalize_one on EVERY input
-    shape: simple, ports (default + explicit), queries, fragments, userinfo,
-    trailing dots, non-http schemes, garbage, None."""
+    """The Arrow batch kernel must agree with canonicalize_one on EVERY
+    input shape: simple, ports (default + explicit), queries, fragments,
+    userinfo, trailing dots, non-http schemes, garbage, None."""
     import pandas as pd
-
-    from cord19_crawler_spark.functions.urls import (
-        _canonicalize_series,
-        canonicalize_one,
-    )
 
     cases = [
         "https://a.example.com/x", "HTTP://A.EXAMPLE.COM/Y#frag",
@@ -165,10 +166,10 @@ def test_vectorized_canonicalize_series_matches_per_row():
         "  https://pad.example.com/x  ", "https://a_b.example.com/x",
         "https://[::1]/x", "https://a.example.com/x#a#b",
         # WHATWG: tab/CR/LF are stripped ANYWHERE in the URL by urlsplit —
-        # the batch fast path must agree (external seeds / sitemap locs)
+        # the batch kernel must agree (external seeds / sitemap locs)
         "http://a.com/pa\tth", "http://a\t.com/x", "http://a.com/x\r\n",
         "ht\ttp://a.com/x", "http://a.com/x?\tb=2&a=1",
-        # query grammar: safe k=v sorts vectorized; odd shapes go exact
+        # query grammar: safe k=v, percent-encoding and odd shapes
         "http://a.com/x?b=2&a=1", "http://a.com/x?a=1",
         "http://a.com/x?a=1&a=0",            # dup keys kept, value-sorted
         "http://a.com/x?a2=b&a=b",           # tuple sort ≠ string sort
@@ -178,7 +179,7 @@ def test_vectorized_canonicalize_series_matches_per_row():
         "http://a.com/x?a+b=c", "HTTP://A.com:080/x?b=2&a=1#f",
     ]
     s = pd.Series(cases, dtype="object")
-    got = list(_canonicalize_series(s))
+    got = list(canonicalize_url.func(s))
     want = [canonicalize_one(u) if isinstance(u, str) else None for u in cases]
     assert got == want
 
@@ -193,13 +194,8 @@ from hypothesis import strategies as _st
 def test_vectorized_canonicalize_property(raw):
     import pandas as pd
 
-    from cord19_crawler_spark.functions.urls import (
-        _canonicalize_series,
-        canonicalize_one,
-    )
-
     url = "https://" + raw
-    got = _canonicalize_series(pd.Series([url, raw], dtype="object"))
+    got = canonicalize_url.func(pd.Series([url, raw], dtype="object"))
     assert list(got) == [canonicalize_one(url), canonicalize_one(raw)]
 
 
@@ -243,13 +239,8 @@ def test_vectorized_canonicalize_query_property(q):
     percent-encoded, missing '=', duplicate keys, stray separators)."""
     import pandas as pd
 
-    from cord19_crawler_spark.functions.urls import (
-        _canonicalize_series,
-        canonicalize_one,
-    )
-
     url = "http://h.example.com/p?" + q
-    got = list(_canonicalize_series(pd.Series([url], dtype="object")))
+    got = list(canonicalize_url.func(pd.Series([url], dtype="object")))
     assert got == [canonicalize_one(url)]
 
 
