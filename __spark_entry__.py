@@ -33,6 +33,11 @@ from cord19_crawler_spark.functions.hashes import (  # noqa: E402
     minhash_expr_sql,
     minhash_params,
 )
+from cord19_crawler_spark.operators.spread import (  # noqa: E402, F401
+    _SCAN_UNITS_CAP,
+    _scan_units,
+    spread_input,
+)
 
 _PKG_ZIP = None
 # (applicationId, zip) of the last addPyFile: one add per SparkContext
@@ -56,56 +61,14 @@ def _ensure_workers(spark: SparkSession) -> None:
         _SHIPPED = shipped
 
 
-# Input-skew guard (optimization guide §2.5 "input skew"): the sf* test
-# tables are SINGLE-ROW-GROUP parquet files, and a parquet row group is the
-# scan's split unit — so however small spark.sql.files.maxPartitionBytes is
-# set, every row lands in ONE scan task and all scan-side work (tokenizer
-# regexes, gram explodes, Arrow kernels, map-side partial aggregation) runs
-# single-core.  Spread the big fact tables by their unique key right after
-# the scan whenever the file layout offers fewer parallel scan units than
-# cores; the exchange moves only the tiny test input (~MBs), and on
-# production inputs (many files / row groups >= cores) this is a no-op, so
-# nothing is tuned to local[32].  Deterministic: hash of a unique id, no
-# round-robin, no rand().
+# Input-skew guard: the sf* test tables are SINGLE-ROW-GROUP parquet
+# files, so the big fact tables are spread by their unique key right after
+# the scan (``operators.spread.spread_input`` holds the rule).
 _SPREAD_KEY = {
     "documents": "doc_id",
     "orders": "o_orderkey",
     "events": "event_id",
 }
-
-
-# plenty of scan units for any core count: the footer walk stops here, so a
-# directory of 10^5 files costs a bounded number of footer reads
-_SCAN_UNITS_CAP = 4096
-
-
-def _scan_units(path: str) -> int:
-    """Parallelizable scan units in a parquet file/dir (= row groups);
-    the count stops once it reaches _SCAN_UNITS_CAP."""
-    global _SCAN_UNITS_CACHE
-    try:
-        cache = _SCAN_UNITS_CACHE
-    except NameError:
-        cache = _SCAN_UNITS_CACHE = {}
-    if path not in cache:
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            units = 0
-            for root, _dirs, files in os.walk(path):
-                for fn in files:
-                    if fn.endswith(".parquet"):
-                        units += pq.ParquetFile(
-                            os.path.join(root, fn)
-                        ).metadata.num_row_groups
-                    if units >= _SCAN_UNITS_CAP:
-                        break
-                if units >= _SCAN_UNITS_CAP:
-                    break  # plenty — stop the whole footer walk
-        else:
-            units = pq.ParquetFile(path).metadata.num_row_groups
-        cache[path] = units
-    return cache[path]
 
 
 def _t(
@@ -118,15 +81,11 @@ def _t(
     single-task scan saves — measured +0.2..1.0s per light query at
     sf1.0.  Queries with heavy scan-side kernels (regex tokenizers, gram
     builders, JSON/HTML parsing) keep the default."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     key = _SPREAD_KEY.get(name)
     if key is None or not spread:
         return df
-    cores = spark.sparkContext.defaultParallelism
-    if _scan_units(path) >= cores:
-        return df
-    return df.repartition(cores, F.col(key))
+    return spread_input(df, key)
 
 
 # ---------------------------------------------------------------------------

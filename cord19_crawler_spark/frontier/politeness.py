@@ -67,7 +67,7 @@ def default_host_state(
     )
 
 
-def _with_wallclock_cols(host_state: DataFrame) -> DataFrame:
+def with_wallclock_cols(host_state: DataFrame) -> DataFrame:
     """Schema guard: older checkpoints / hand-built dimensions may lack the
     wall-clock columns — treat them as null (no wall-clock constraint)."""
     hs = host_state
@@ -102,7 +102,7 @@ def eligible_urls(
     dimension's stats fall under autoBroadcastJoinThreshold; pass
     ``broadcast_state=True`` only for a dimension known to be small
     (plan-asserted in tests/test_plans.py)."""
-    hs = _with_wallclock_cols(host_state).select(*HOST_STATE_COLS)
+    hs = with_wallclock_cols(host_state).select(*HOST_STATE_COLS)
     if broadcast_state:
         hs = F.broadcast(hs)
     joined = pending.join(hs, "host", "left")

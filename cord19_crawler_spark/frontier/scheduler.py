@@ -573,10 +573,7 @@ class CrawlScheduler:
             upto_rnd, "host_state", "host_state", merge_schema=True
         )
         # checkpoints written before wall-clock politeness lack these columns
-        for c in ("min_delay_seconds", "last_fetch_ts"):
-            if c not in allr.columns:
-                allr = allr.withColumn(c, F.lit(None).cast("double"))
-        latest = allr.groupBy("host").agg(
+        latest = politeness.with_wallclock_cols(allr).groupBy("host").agg(
             F.max(
                 F.struct(
                     "_sr", "min_delay_rounds", "max_in_flight",

@@ -16,7 +16,8 @@ over Arrow batches (~10k rows per Python exchange — the batch amortizes
 the boundary, so no per-row Python UDF sits in the hot path).
 ``canonicalize_url_sql`` is the pure-Catalyst form for the simple grammar
 (no userinfo, no percent-encoding); it agrees with ``canonicalize_one``
-there, ports and trailing host dots included (tests/test_urls.py).
+there, NULL for None, ports and trailing host dots included
+(tests/test_urls.py).
 """
 
 from __future__ import annotations
@@ -134,10 +135,12 @@ def canonicalize_url_sql(col: Column) -> Column:
     ports, sort query params. Used when the URL grammar is known to be
     simple (no userinfo, no encoded chars) — ``canonicalize_one`` is the
     general-purpose kernel, this is the fast path that stays inside
-    WholeStageCodegen.  NULL where ``canonicalize_one`` gives None for a
-    port above 65535.  Equality with ``canonicalize_one`` on this grammar
-    (ports and trailing host dots included) is pinned by
-    tests/test_urls.py.
+    WholeStageCodegen.  NULL where ``canonicalize_one`` gives None: a
+    scheme other than http(s), an empty host (``http://./x``), a port
+    above 65535 or with a non-digit (``:8o``).  An empty port
+    (``a.com:/x``) is dropped.  Equality with ``canonicalize_one`` on
+    this grammar (ports and trailing host dots included) is pinned by
+    tests/test_urls.py; userinfo and percent-encoding are outside it.
     """
     no_frag = F.regexp_replace(col, r"#.*$", "")
     base = F.regexp_extract(no_frag, r"^([^?]*)", 1)
@@ -171,28 +174,33 @@ def canonicalize_url_sql(col: Column) -> Column:
     )
     # port: parse numerically ('0443' == 443, urlsplit semantics), strip
     # the scheme default, keep others re-emitted from the numeric value;
-    # a port above 65535 makes the whole URL NULL (urlsplit raises); a
-    # non-numeric ':...' tail falls through unchanged (out of grammar).
+    # an empty port (':') is no port. The whole URL is NULL, as
+    # canonicalize_one's None, for a port above 65535 or with a non-digit,
+    # an empty host, or a scheme other than http(s).
     # Trailing host dots go, as in canonicalize_one ('a.com.' == 'a.com').
     authority = F.lower(hostpath)
     host_only = F.regexp_replace(
         F.substring_index(authority, ":", 1), r"\.+$", ""
     )
-    port_str = F.regexp_extract(authority, r"^[^:]*:0*(\d+)$", 1)
+    port_raw = F.regexp_extract(authority, r"^[^:]*:(.*)$", 1)
+    port_str = F.regexp_extract(port_raw, r"^0*(\d+)$", 1)
     port_num = F.when(
         (port_str != "") & (F.length(port_str) <= 5), port_str.cast("long")
     )
-    port_out_of_range = (F.length(port_str) > 5) | (port_num > 65535)
+    invalid = (
+        (scheme == "")
+        | (host_only == "")
+        | ((port_raw != "") & (port_str == ""))  # a non-digit in the port
+        | (F.length(port_str) > 5)
+        | (port_num > 65535)
+    )
     is_default = ((scheme == "http") & (port_num == 80)) | (
         (scheme == "https") & (port_num == 443)
     )
-    netloc = (
-        F.when(~authority.contains(":"), host_only)
-        .when(port_num.isNull(), authority)
-        .when(is_default, host_only)
-        .otherwise(F.concat(host_only, F.lit(":"), port_num.cast("string")))
+    netloc = F.when(port_num.isNull() | is_default, host_only).otherwise(
+        F.concat(host_only, F.lit(":"), port_num.cast("string"))
     )
-    return F.when(port_out_of_range, F.lit(None).cast("string")).otherwise(
+    return F.when(invalid, F.lit(None).cast("string")).otherwise(
         F.concat(
             scheme,
             F.lit("://"),

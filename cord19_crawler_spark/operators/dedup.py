@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashes import md5_long56, minhash_expr, minhash_params
+from .spread import spread_input
 
 # Production default for the hot-bucket caps in the e2e near-dup entry
 # points (r4 verdict item #3): at 100 TB an UNCAPPED degenerate bucket —
@@ -218,15 +219,10 @@ def minhash_near_duplicates(
       CacheManager pin; one distributed write (see operators/iterutil.py).
     * ``"none"``: no reuse; recomputes shingles per consumer.
     """
-    # input-skew guard (opt guide §2.5): a docs frame with fewer scan
-    # partitions than cores (e.g. a single-row-group test parquet) would
-    # build and hash every shingle in ONE task; spread by the unique id
-    # first.  getNumPartitions is driver-side plan metadata (no job);
-    # production inputs have >= cores partitions and skip this entirely.
-    sc = docs.sparkSession.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism, F.col(id_col))
-    sh = shingles(docs, id_col, text_col, ngram)
+    # input-skew guard: a docs frame read from fewer row groups than cores
+    # (e.g. a single-row-group test parquet) would build and hash every
+    # shingle in ONE task; spread by the unique id first
+    sh = shingles(spread_input(docs, id_col), id_col, text_col, ngram)
     if shingle_storage == "localCheckpoint":
         sh = sh.localCheckpoint(eager=False)
     elif shingle_storage == "cache":

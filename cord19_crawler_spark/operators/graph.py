@@ -1,4 +1,19 @@
-"""Distributed connected components — near-duplicate CLUSTERING.
+"""Graph operators over DataFrame edge lists: connected components for
+near-duplicate clustering, and the link-analysis operators a crawler
+orders and polices its frontier by.
+
+Link analysis shares a few private helpers instead of per-operator
+copies: ``_directed_edges`` (cast to long, self-loops dropped, parallel
+edges collapsed), ``_node_set`` (the distinct endpoints), and one
+personalized-PageRank step, ``_propagate``, over the (node, outdeg,
+tele, x) frame ``_walk_state`` builds once.  ``pagerank`` runs the step
+with the uniform teleport vector 1/N, ``trustrank`` with the trusted-seed
+vector, and ``opic`` at damping 1 (plus its own cash-history sum);
+``spam_mass`` joins PageRank and TrustRank.  ``hits`` and ``salsa`` keep
+their own update rules (L2-normalized sums; stochastic two-hop walks).
+
+Connected components
+--------------------
 
 The dedup operators in ``operators/dedup.py`` stop at candidate/verified
 PAIRS (doc_a, doc_b).  A training-data pipeline needs one more step: group
@@ -294,6 +309,96 @@ def components_with_size(
     )
 
 
+def _directed_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Directed edge list → (src, dst) as longs, self-loops dropped,
+    parallel edges collapsed (distinct)."""
+    return (
+        edges.select(
+            F.col(src).cast("long").alias("src"),
+            F.col(dst).cast("long").alias("dst"),
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
+def _node_set(e: DataFrame) -> DataFrame:
+    """Distinct endpoints of an (src, dst) edge frame, as ``node``."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
+def _walk_state(e: DataFrame, nodes: DataFrame, tele, ckpt) -> DataFrame:
+    """The (node, outdeg, tele, x) frame a link walk starts from, built
+    once: ``tele`` is the teleport weight, a Column over ``nodes``, and
+    ``x`` starts AT it."""
+    outdeg = e.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).alias("outdeg")
+    )
+    return ckpt(
+        nodes.join(outdeg, "node", "left").select(
+            "node",
+            F.coalesce("outdeg", F.lit(0)).alias("outdeg"),
+            tele.alias("tele"),
+            tele.alias("x"),
+        )
+    )
+
+
+def _propagate(
+    e: DataFrame, state: DataFrame, damping: float, *carry
+) -> DataFrame:
+    """One personalized-PageRank step over a ``_walk_state`` frame:
+    x'(v) = (1-d)·tele(v) + d·(Σ_{u→v} x(u)/outdeg(u) + dm·tele(v)),
+    where dm is the summed x of out-degree-0 nodes — spread over the
+    teleport vector, so total mass is kept.  ``pagerank`` (tele = 1/N),
+    ``trustrank`` (tele = the seed vector) and ``opic`` (d = 1) all run
+    this step.  ``carry`` are extra output columns, evaluated on the
+    pre-step row.
+
+    Per step ONE wide shuffle — the contribution aggregate on dst with
+    map-side partials — plus the edge⋈x join on src; the dangling mass
+    is a 1-row aggregate broadcast back onto the node frame."""
+    d = float(damping)
+    dangling = state.filter(F.col("outdeg") == 0).agg(
+        F.coalesce(F.sum("x"), F.lit(0.0)).alias("_dm")
+    )
+    contribs = (
+        e.join(
+            # filter BEFORE dividing: ANSI mode faults x/0 even for rows
+            # the join would drop (dangling nodes never match e.src)
+            state.filter(F.col("outdeg") > 0).select(
+                F.col("node").alias("src"),
+                (F.col("x") / F.col("outdeg")).alias("_share"),
+            ),
+            "src",
+        )
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.sum("_share").alias("_contrib"))
+    )
+    return (
+        state.join(contribs, "node", "left")
+        .crossJoin(F.broadcast(dangling))
+        .select(
+            "node",
+            "outdeg",
+            "tele",
+            (
+                F.lit(1.0 - d) * F.col("tele")
+                + F.lit(d)
+                * (
+                    F.coalesce("_contrib", F.lit(0.0))
+                    + F.col("_dm") * F.col("tele")
+                )
+            ).alias("x"),
+            *carry,
+        )
+    )
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 10,
@@ -317,12 +422,13 @@ def pagerank(
     are order-dependent across engines at ~1e-15/iteration, and the
     damped iteration is a contraction, so round-6 values are stable).
 
-    Scale shape (10^10 edges): per iteration, ONE wide shuffle — the
-    contribution aggregate on dst (map-side partial sums) — plus a join
-    of edges against the current rank vector on src; outdegrees are
-    computed once; the dangling mass is a 1-row aggregate broadcast back
-    onto the node frame. Iteration count is FIXED (no convergence
-    collect), and per-round lineage is truncated exactly like
+    Scale shape (10^10 edges): each iteration is the shared
+    ``_propagate`` step — ONE wide shuffle (the contribution aggregate
+    on dst, map-side partial sums) plus a join of edges against the
+    current rank vector on src; outdegrees are computed once; the
+    dangling mass is a 1-row aggregate broadcast back onto the node
+    frame. Iteration count is FIXED (no convergence collect), and
+    per-round lineage is truncated exactly like
     ``connected_components`` above (``checkpoint_dir`` trades
     localCheckpoint speed for reliable-checkpoint executor-loss safety —
     see iterutil), so deep iteration never stacks a re-computable plan.
@@ -333,67 +439,15 @@ def pagerank(
     if not (0.0 <= damping <= 1.0):
         raise ValueError(f"damping must be in [0, 1], got {damping}")
     _ckpt = lineage_truncator(checkpoint_dir)
-    e = _ckpt(
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    nodes = _ckpt(
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e = _ckpt(_directed_edges(edges, src, dst))
+    nodes = _ckpt(_node_set(e))
     n_nodes = nodes.count()
     if n_nodes == 0:
         return nodes.withColumn("rank", F.lit(0.0))
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    base = _ckpt(
-        nodes.join(outdeg, "node", "left").select(
-            "node", F.coalesce("outdeg", F.lit(0)).alias("outdeg")
-        )
-    )
-    d = float(damping)
-    teleport = (1.0 - d) / n_nodes
-    ranks = base.select("node", "outdeg", F.lit(1.0 / n_nodes).alias("rank"))
+    state = _walk_state(e, nodes, F.lit(1.0 / n_nodes), _ckpt)
     for _ in range(iterations):
-        dangling = ranks.filter(F.col("outdeg") == 0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        contribs = (
-            e.join(
-                # filter BEFORE dividing: ANSI mode faults rank/0 even for
-                # rows the join would drop (dangling nodes never match e.src)
-                ranks.filter(F.col("outdeg") > 0).select(
-                    F.col("node").alias("src"),
-                    (F.col("rank") / F.col("outdeg")).alias("share"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").alias("contrib"))
-        )
-        ranks = _ckpt(
-            base.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "outdeg",
-                (
-                    F.lit(teleport)
-                    + F.lit(d)
-                    * (
-                        F.coalesce("contrib", F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n_nodes))
-                    )
-                ).alias("rank"),
-            )
-        )
-    return ranks.select("node", "rank")
+        state = _ckpt(_propagate(e, state, damping))
+    return state.select("node", F.col("x").alias("rank"))
 
 
 def anchor_text_index(
@@ -498,62 +552,38 @@ def hits(
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     _ckpt = lineage_truncator(checkpoint_dir)
-    e = _ckpt(
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
+    e = _ckpt(_directed_edges(edges, src, dst))
+    nodes = _ckpt(_node_set(e))
+
+    def _sum_and_normalize(score, col, frm, to, out):
+        """out(to) = Σ_{frm→to} score(frm), then L2-normalized over the
+        node frame (0 where nothing arrives)."""
+        raw = (
+            e.join(score.withColumnRenamed("node", frm), frm)
+            .groupBy(F.col(to).alias("node"))
+            .agg(F.sum(col).alias("_raw"))
         )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    nodes = _ckpt(
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+        norm = raw.agg(
+            F.sqrt(F.coalesce(F.sum(F.col("_raw") * F.col("_raw")), F.lit(0.0)))
+            .alias("_norm")
+        )
+        return (
+            nodes.join(raw, "node", "left")
+            .crossJoin(F.broadcast(norm))
+            .select(
+                "node",
+                (
+                    F.coalesce("_raw", F.lit(0.0))
+                    / F.when(F.col("_norm") > 0.0, F.col("_norm")).otherwise(1.0)
+                ).alias(out),
+            )
+        )
+
     hub = nodes.select("node", F.lit(1.0).alias("hub"))
     auth = nodes.select("node", F.lit(0.0).alias("authority"))
     for _ in range(iterations):
-        a_raw = (
-            e.join(hub.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("_a"))
-        )
-        a_norm = a_raw.agg(
-            F.sqrt(F.coalesce(F.sum(F.col("_a") * F.col("_a")), F.lit(0.0)))
-            .alias("_na")
-        )
-        auth = (
-            nodes.join(a_raw, "node", "left")
-            .crossJoin(F.broadcast(a_norm))
-            .select(
-                "node",
-                (
-                    F.coalesce("_a", F.lit(0.0))
-                    / F.when(F.col("_na") > 0.0, F.col("_na")).otherwise(1.0)
-                ).alias("authority"),
-            )
-        )
-        h_raw = (
-            e.join(auth.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("authority").alias("_h"))
-        )
-        h_norm = h_raw.agg(
-            F.sqrt(F.coalesce(F.sum(F.col("_h") * F.col("_h")), F.lit(0.0)))
-            .alias("_nh")
-        )
-        hub = (
-            nodes.join(h_raw, "node", "left")
-            .crossJoin(F.broadcast(h_norm))
-            .select(
-                "node",
-                (
-                    F.coalesce("_h", F.lit(0.0))
-                    / F.when(F.col("_nh") > 0.0, F.col("_nh")).otherwise(1.0)
-                ).alias("hub"),
-            )
-        )
+        auth = _sum_and_normalize(hub, "hub", "src", "dst", "authority")
+        hub = _sum_and_normalize(auth, "authority", "dst", "src", "hub")
         joined = _ckpt(auth.join(hub, "node"))
         auth = joined.select("node", "authority")
         hub = joined.select("node", "hub")
@@ -586,12 +616,10 @@ def domain_link_graph(
     PSL lookup; IPv6 literal hosts are out of scope (documented).
     """
     from ..frontier.psl import with_registrable_domain
+    from ..functions.urls import authority_expr
 
     def _host(col):
-        auth = F.regexp_extract(
-            F.col(col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)", 1
-        )
-        auth = F.regexp_replace(auth, "^[^@]*@", "")
+        auth = F.regexp_replace(authority_expr(F.col(col)), "^[^@]*@", "")
         return F.lower(F.regexp_replace(auth, ":[0-9]+$", ""))
 
     e = edges.select(
@@ -646,6 +674,10 @@ def opic(
     is invariant (= 1) up to float noise; round-6 values are stable
     across engines.
 
+    A synchronous round is exactly ``pagerank``'s step at damping 1
+    (the shared ``_propagate``), so ``cash`` equals ``pagerank(...,
+    damping=1.0).rank`` (tests/test_trust_bfs.py pins it).
+
     Scale shape (10^10 edges): per round ONE wide shuffle — the
     received-cash aggregate keyed on dst (map-side partials) — plus the
     edge⋈cash join on src and a 1-row dangling/virtual-root aggregate
@@ -656,66 +688,24 @@ def opic(
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     _ckpt = lineage_truncator(checkpoint_dir)
-    e = _ckpt(
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    nodes = _ckpt(
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e = _ckpt(_directed_edges(edges, src, dst))
+    nodes = _ckpt(_node_set(e))
     n_nodes = nodes.count()
     if n_nodes == 0:
         return nodes.select(
             "node", F.lit(0.0).alias("importance"),
             F.lit(0.0).alias("history"), F.lit(0.0).alias("cash"),
         )
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    base = _ckpt(
-        nodes.join(outdeg, "node", "left").select(
-            "node", F.coalesce("outdeg", F.lit(0)).alias("outdeg")
-        )
-    )
-    state = base.select(
-        "node", "outdeg",
-        F.lit(1.0 / n_nodes).alias("cash"),
-        F.lit(0.0).alias("history"),
+    # a round is the PageRank step at damping 1 (the dangling cash is the
+    # virtual root's, re-injected uniformly); history sums the cash each
+    # node distributed
+    state = _walk_state(e, nodes, F.lit(1.0 / n_nodes), _ckpt).withColumn(
+        "history", F.lit(0.0)
     )
     for _ in range(iterations):
-        # virtual root: one row with the round's dangling cash
-        root = state.filter(F.col("outdeg") == 0).agg(
-            F.coalesce(F.sum("cash"), F.lit(0.0)).alias("root_cash")
-        )
-        received = (
-            e.join(
-                state.filter(F.col("outdeg") > 0).select(
-                    F.col("node").alias("src"),
-                    (F.col("cash") / F.col("outdeg")).alias("share"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").alias("recv"))
-        )
         state = _ckpt(
-            base.join(received, "node", "left")
-            .join(state.select("node", "cash", "history"), "node")
-            .crossJoin(F.broadcast(root))
-            .select(
-                "node",
-                "outdeg",
-                (
-                    F.coalesce("recv", F.lit(0.0))
-                    + F.col("root_cash") / F.lit(float(n_nodes))
-                ).alias("cash"),
-                (F.col("history") + F.col("cash")).alias("history"),
+            _propagate(
+                e, state, 1.0, (F.col("history") + F.col("x")).alias("history")
             )
         )
     total_hist = state.agg(F.sum("history").alias("th"))
@@ -723,10 +713,10 @@ def opic(
         state.crossJoin(F.broadcast(total_hist))
         .select(
             "node",
-            ((F.col("history") + F.col("cash")) / (F.col("th") + 1.0))
+            ((F.col("history") + F.col("x")) / (F.col("th") + 1.0))
             .alias("importance"),
             "history",
-            "cash",
+            F.col("x").alias("cash"),
         )
     )
 
@@ -761,7 +751,8 @@ def trustrank(
     trust stays 1.  Returns (node, trust) raw doubles after exactly
     `iterations` rounds; callers round for comparison.
 
-    Scale shape (10^10 edges): identical to `pagerank` — ONE wide
+    Scale shape (10^10 edges): identical to `pagerank` (the same
+    ``_propagate`` step, seed vector as teleport) — ONE wide
     shuffle per iteration (the contribution aggregate on dst with
     map-side partials) plus the edge-against-trust join on src; the
     seed weight is a static column on the node frame (one broadcast-
@@ -774,19 +765,8 @@ def trustrank(
     if not (0.0 <= damping <= 1.0):
         raise ValueError(f"damping must be in [0, 1], got {damping}")
     _ckpt = lineage_truncator(checkpoint_dir)
-    e = _ckpt(
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    nodes = _ckpt(
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e = _ckpt(_directed_edges(edges, src, dst))
+    nodes = _ckpt(_node_set(e))
     seed_nodes = (
         seeds.select(F.col(seed_col).cast("long").alias("node"))
         .distinct()
@@ -795,53 +775,18 @@ def trustrank(
     n_seeds = seed_nodes.count()
     if n_seeds == 0:
         raise ValueError("no trusted seed is a node of the edge graph")
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
+    # s(v) = 1/|S| on the seeds, 0 elsewhere
+    state = _walk_state(
+        e,
+        nodes.join(
+            seed_nodes.withColumn("_s", F.lit(1.0 / n_seeds)), "node", "left"
+        ),
+        F.coalesce("_s", F.lit(0.0)),
+        _ckpt,
     )
-    base = _ckpt(
-        nodes.join(outdeg, "node", "left")
-        .join(seed_nodes.withColumn("_s", F.lit(1.0 / n_seeds)), "node", "left")
-        .select(
-            "node",
-            F.coalesce("outdeg", F.lit(0)).alias("outdeg"),
-            F.coalesce("_s", F.lit(0.0)).alias("sw"),
-        )
-    )
-    d = float(damping)
-    trust = base.select("node", "outdeg", "sw", F.col("sw").alias("trust"))
     for _ in range(iterations):
-        dangling = trust.filter(F.col("outdeg") == 0).agg(
-            F.coalesce(F.sum("trust"), F.lit(0.0)).alias("dm")
-        )
-        contribs = (
-            e.join(
-                trust.filter(F.col("outdeg") > 0).select(
-                    F.col("node").alias("src"),
-                    (F.col("trust") / F.col("outdeg")).alias("share"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").alias("contrib"))
-        )
-        trust = _ckpt(
-            base.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "outdeg",
-                "sw",
-                (
-                    F.lit(1.0 - d) * F.col("sw")
-                    + F.lit(d)
-                    * (
-                        F.coalesce("contrib", F.lit(0.0))
-                        + F.col("dm") * F.col("sw")
-                    )
-                ).alias("trust"),
-            )
-        )
-    return trust.select("node", "trust")
+        state = _ckpt(_propagate(e, state, damping))
+    return state.select("node", F.col("x").alias("trust"))
 
 
 def spam_mass(
@@ -929,14 +874,7 @@ def bfs_depth(
     if max_depth < 0:
         raise ValueError(f"max_depth must be >= 0, got {max_depth}")
     _ckpt = lineage_truncator(checkpoint_dir)
-    e = _ckpt(
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e = _ckpt(_directed_edges(edges, src, dst))
     visited = _ckpt(
         seeds.select(F.col(seed_col).cast("long").alias("node"))
         .distinct()
@@ -1194,14 +1132,7 @@ def salsa(
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     _ckpt = lineage_truncator(checkpoint_dir)
-    e = _ckpt(
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e = _ckpt(_directed_edges(edges, src, dst))
     indeg = e.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).alias("ind")
     )
@@ -1221,45 +1152,44 @@ def salsa(
     hub = _ckpt(
         outdeg.select("node", "outd", F.lit(1.0 / n_hub).alias("hub"))
     )
+
+    # a side: (its degree frame, degree column, its end of an edge)
+    a_side = (indeg, "ind", "dst")
+    h_side = (outdeg, "outd", "src")
+
+    def _two_hop(score, col, side, other):
+        """One chain round: from each member of ``side`` along a
+        uniformly-chosen edge (1/deg) to the ``other`` side, then back
+        along a uniformly-chosen edge of that node (1/its deg)."""
+        _, deg, near = side
+        far_degs, far_deg, far = other
+        at_far = (
+            e.join(
+                score.select(
+                    F.col("node").alias(near),
+                    (F.col(col) / F.col(deg)).alias("_m"),
+                ),
+                near,
+            )
+            .groupBy(F.col(far).alias("node"))
+            .agg(F.sum("_m").alias("_s"))
+            .join(far_degs, "node")
+            .select(
+                F.col("node").alias(far),
+                (F.col("_s") / F.col(far_deg)).alias("_t"),
+            )
+        )
+        return (
+            e.join(at_far, far)
+            .groupBy(F.col(near).alias("node"))
+            .agg(F.sum("_t").alias(col))
+        )
+
     for _ in range(iterations):
-        # authority chain: back along 1/indeg, forward along 1/outdeg
-        at_hub = (
-            e.join(
-                auth.select(
-                    F.col("node").alias("dst"),
-                    (F.col("authority") / F.col("ind")).alias("_m"),
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("_m").alias("_s"))
-            .join(outdeg, "node")
-            .select(F.col("node").alias("src"), (F.col("_s") / F.col("outd")).alias("_t"))
-        )
-        a_new = (
-            e.join(at_hub, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("_t").alias("authority"))
-        )
-        # hub chain: forward along 1/outdeg, back along 1/indeg
-        at_auth = (
-            e.join(
-                hub.select(
-                    F.col("node").alias("src"),
-                    (F.col("hub") / F.col("outd")).alias("_m"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("_m").alias("_s"))
-            .join(indeg, "node")
-            .select(F.col("node").alias("dst"), (F.col("_s") / F.col("ind")).alias("_t"))
-        )
-        h_new = (
-            e.join(at_auth, "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("_t").alias("hub"))
-        )
+        # authority chain: back along 1/indeg, forward along 1/outdeg;
+        # the hub chain is its mirror image
+        a_new = _two_hop(auth, "authority", a_side, h_side)
+        h_new = _two_hop(hub, "hub", h_side, a_side)
         # membership is FIXED (authorities = indeg>0 nodes, hubs =
         # outdeg>0 nodes, and every member receives positive mass each
         # round — see the inner-join argument in the docstring), so the
@@ -1318,20 +1248,8 @@ def hyperball(
     from .sketches import hll_estimate_from_registers, hll_registers
 
     _ckpt = lineage_truncator(checkpoint_dir)
-    e = _ckpt(
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    reg = _ckpt(hll_registers(nodes, "node", group_cols=("node",), p=p))
+    e = _ckpt(_directed_edges(edges, src, dst))
+    reg = _ckpt(hll_registers(_node_set(e), "node", group_cols=("node",), p=p))
     for _ in range(radius):
         from_nbrs = (
             e.join(reg.withColumnRenamed("node", "dst"), "dst")
@@ -1371,14 +1289,7 @@ def link_reciprocity(
     themselves, so AQE handles hub skew with the standard skew-join
     split.
     """
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    e = _directed_edges(edges, src, dst)
     back = e.select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
     )

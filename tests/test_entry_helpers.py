@@ -1,7 +1,7 @@
 """Driver-side helpers: the package zipper behind ``python -m
 cord19_crawler_spark package`` and ``__spark_entry__._ensure_workers``,
-the once-per-SparkContext package shipping, and the bounded parquet
-footer walk behind the input-spread guard."""
+the once-per-SparkContext package shipping, and the input-spread rule
+with its bounded parquet footer walk."""
 
 import os
 import subprocess
@@ -88,3 +88,67 @@ def test_ensure_workers_ships_once_per_spark_context(monkeypatch):
     assert added == [
         ("local-1", "/preset/pkg.zip"), ("local-2", "/preset/pkg.zip")
     ]
+
+
+def _one_row_group_docs(spark, path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = ["alpha beta gamma delta", "alpha beta gamma delta x", "zeta eta"]
+    pq.write_table(
+        pa.table({"doc_id": [1, 2, 3], "text": texts}), str(path)
+    )
+    return spark.read.parquet(str(path))
+
+
+def test_spread_input_reads_the_file_layout(spark, tmp_path):
+    from cord19_crawler_spark.operators.spread import spread_input
+
+    def exchanges(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count(
+            "RepartitionByExpression"
+        )
+
+    plain = _one_row_group_docs(spark, tmp_path / "docs.parquet")
+    assert exchanges(spread_input(plain, "doc_id")) == 1
+    # a spread of an already-spread read collapses into one exchange
+    twice = spread_input(spread_input(plain, "doc_id"), "doc_id")
+    assert exchanges(twice) == 1
+    in_memory = spark.createDataFrame([(1, "a")], "doc_id long, text string")
+    assert spread_input(in_memory, "doc_id") is in_memory
+
+
+def test_file_units_counts_unreadable_footers_as_one_unit(tmp_path):
+    from cord19_crawler_spark.operators.spread import _file_units
+
+    # Spark's S3 scheme is unknown to pyarrow; a JSON file has no footer
+    assert _file_units("s3a://bucket/part-0.snappy.parquet") == 1
+    assert _file_units(f"file://{tmp_path}/part-0.json") == 1
+
+
+def test_minhash_build_runs_no_job_for_a_shuffled_input(spark, tmp_path):
+    # the input-spread decision reads the file layout, never executes the
+    # upstream plan: building the operator on a repartitioned or
+    # aggregated input costs the same jobs as on a plain read
+    from pyspark.sql import functions as F
+
+    from cord19_crawler_spark.operators.dedup import minhash_near_duplicates
+
+    plain = _one_row_group_docs(spark, tmp_path / "docs.parquet")
+    inputs = {
+        "plain": plain,
+        "repartitioned": plain.repartition(3, "doc_id"),
+        "aggregated": plain.groupBy("doc_id").agg(F.max("text").alias("text")),
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    for name, docs in inputs.items():
+        group = f"minhash-build-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            minhash_near_duplicates(docs, num_perm=8, bands=4, ngram=1)
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["repartitioned"] == jobs["plain"], jobs
+    assert jobs["aggregated"] == jobs["plain"], jobs

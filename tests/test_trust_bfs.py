@@ -8,6 +8,7 @@ import pytest
 
 from cord19_crawler_spark.operators.graph import (
     bfs_depth,
+    opic,
     pagerank,
     spam_mass,
     trustrank,
@@ -151,6 +152,28 @@ def test_trustrank_consistent_with_pagerank_when_all_nodes_seeded(spark):
     }
     for n in pr:
         assert tr[n] == pytest.approx(pr[n], abs=1e-12)
+
+
+def test_opic_cash_equals_pagerank_at_damping_one(spark):
+    # a synchronous OPIC round is the PageRank step at damping 1: cash
+    # starts at 1/N, spreads over out-links, dangling cash re-enters
+    # uniformly — so cash after k rounds IS the undamped rank after k
+    for seed, n, m, k in [(3, 10, 25, 4), (11, 25, 60, 7), (29, 8, 12, 3)]:
+        rng = random.Random(seed)
+        edges = {(rng.randrange(n), rng.randrange(n)) for _ in range(m)}
+        cash = {
+            r["node"]: r["cash"]
+            for r in opic(_edges_df(spark, edges), iterations=k).collect()
+        }
+        rank = {
+            r["node"]: r["rank"]
+            for r in pagerank(
+                _edges_df(spark, edges), iterations=k, damping=1.0
+            ).collect()
+        }
+        assert cash.keys() == rank.keys()
+        for node in rank:
+            assert cash[node] == pytest.approx(rank[node], abs=1e-12)
 
 
 def test_bfs_depth_matches_python_replay_randomized(spark):

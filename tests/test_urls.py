@@ -107,6 +107,12 @@ def test_catalyst_fast_path_matches_python_kernel(spark):
         # trailing host dots strip, also before a port
         "http://a.com./x",
         "http://a.com..:8080/x",
+        # an empty port is no port; a non-numeric port, a host of dots
+        # only and a non-http(s) scheme give NULL (Python: None)
+        "http://a.com:/x",
+        "http://./x",
+        "http://a.com:8o/x",
+        "ftp://a.com/x",
     ]
     df = spark.createDataFrame([(u,) for u in simple], "url string")
     both = df.select(
